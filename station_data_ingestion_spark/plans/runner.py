@@ -3,7 +3,7 @@
 Re-expresses the reference's operational loop [reference:
 src/driver.py:101-170, utils/task.sh:8-15, README.md:41-43]:
 
-- per data_item, per file: ingest wide CSV -> observations + metadata
+- per data_item, per commit group of work units: observations + metadata
 - observations MERGE into the target parquet table (partitioned by
   datatype/period so date-range queries prune partitions)
 - per-file commit manifest for resume: a file that completed is skipped on
@@ -32,9 +32,17 @@ from station_data_ingestion_spark.operators.merge import (
     RecordKeyError,
     merge_observed,
 )
+from station_data_ingestion_spark.operators.sinks import sparse_json_docs, write_docs
 from station_data_ingestion_spark.plans.jobspec import DataItemSpec, JobSpec
 from station_data_ingestion_spark.sources.remote import stage_if_remote
-from station_data_ingestion_spark.sources.wide_csv import ingest_wide_csv
+from station_data_ingestion_spark.sources.wide_csv import (
+    classify_headers,
+    ingest_wide_csv,
+    metadata_from_wide,
+    plan_wide_units,
+    read_wide_units,
+    scan_wide_csv,
+)
 
 OBS_PARTITION_COLS = ("datatype", "period")
 _MAX_MERGE_REDO_ATTEMPTS = 5
@@ -70,13 +78,9 @@ class Manifest:
         self._save()
 
     def mark_batch_complete(self, files: list[str], stats: MergeStats) -> None:
-        """One merged batch of files done: stats recorded ONCE.
-
-        Per-file entries carry only completion + a batch pointer, so
-        summing created/replaced across the manifest stays additive (a
-        batch's totals cannot be counted once per member file). Batch
-        records live under the reserved "__batches__" key.
-        """
+        """One merged batch of files done: stats recorded ONCE, under the
+        reserved "__batches__" key; per-file entries carry only completion
+        + a batch pointer, so manifest sums stay additive."""
         import uuid
 
         bid = uuid.uuid4().hex[:12]
@@ -99,11 +103,18 @@ class Manifest:
         }
 
     def mark_ranges_complete(
-        self, file: str, range_keys: list[str], stats: MergeStats, split_bytes: int
+        self,
+        file: str,
+        range_keys: list[str],
+        stats: MergeStats,
+        split_bytes: int,
+        complete: bool,
     ) -> None:
         """One commit's worth of ranges done; stat sums stay ADDITIVE --
-        stats attach to the commit (group), never invented per range."""
+        stats attach to the commit (group), never invented per range.
+        ``complete`` marks the file's last group (same write, no window)."""
         entry = self.state.setdefault(file, {"complete": False})
+        entry["complete"] = complete
         entry["split_bytes"] = split_bytes
         done = set(entry.get("ranges", []))
         done.update(range_keys)
@@ -124,16 +135,22 @@ class Manifest:
 
 
 def _table_has_parquet(spark: SparkSession, table_path: str) -> bool:
-    """True iff the path exists and contains >=1 parquet file (any FS)."""
+    """True iff the path holds a plain-layout table (any FS): >=1 parquet
+    file under a ``datatype=`` partition dir. Files a snapshot commit
+    promoted into ``data/`` before a crash cut its first publish do not
+    count -- the re-run must bootstrap the snapshot table, not read them."""
     jvm = spark._jvm
     path = jvm.org.apache.hadoop.fs.Path(table_path)
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(path):
         return False
-    it = fs.listFiles(path, True)
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(".parquet"):
-            return True
+    for st in fs.listStatus(path):
+        if not st.getPath().getName().startswith(f"{OBS_PARTITION_COLS[0]}="):
+            continue
+        it = fs.listFiles(st.getPath(), True)
+        while it.hasNext():
+            if it.next().getPath().getName().endswith(".parquet"):
+                return True
     return False
 
 
@@ -156,10 +173,9 @@ def read_obs_table(spark: SparkSession, table_path: str, spec: DataItemSpec) -> 
         if df is not None:
             return df
     # A previous zero-row run leaves a dir with no parquet footers, so an
-    # existence check alone isn't enough to read it back. Uses the Hadoop
-    # FileSystem API, NOT os.path: on hdfs:// or s3a:// paths a local
-    # check would report "missing", the target would read as empty, and
-    # the dynamic partition overwrite would then wipe the real slice.
+    # existence check alone isn't enough. The Hadoop FileSystem API (not
+    # os.path) keeps an hdfs:// or s3a:// target from reading as empty,
+    # which would let the dynamic partition overwrite wipe the real slice.
     if snap.exists() or not _table_has_parquet(spark, table_path):
         schema = "station_id string, date string, value double, " + ", ".join(
             f"{k} string" for k in spec.static_properties
@@ -186,21 +202,17 @@ def _merge_into_table(
     obs: DataFrame,
     item: DataItemSpec,
     obs_table_path: str,
-    table_format: str = "snapshot",
 ) -> MergeStats:
     """Read the pruned target, align schemas, merge, overwrite the slice.
 
-    The single sequence both runner modes share; key-integrity failures
-    surface as RecordKeyError.
+    The single merge sequence of ``run_job`` and the streaming ingest;
+    key-integrity failures surface as RecordKeyError.
 
-    Concurrency: MERGE is read-merge-write, so a rival commit landing
-    between our target read and our publish would be silently dropped by
-    a last-publisher-wins rebase. Snapshot targets therefore publish
+    Concurrency: MERGE is read-merge-write, so snapshot targets publish
     with compare-and-swap (``expected_version`` = the version the merge
     read); a CAS loss re-reads the NEW snapshot and redoes the whole
-    merge — serializable isolation, never lost updates. Bounded retries:
-    a merge is minutes of work, so pathological contention should fail
-    loudly rather than spin.
+    merge -- serializable isolation, never a lost update. Retries are
+    bounded: pathological contention fails loudly rather than spins.
     """
     from station_data_ingestion_spark.plans.snapshot_store import (
         ConcurrentCommitError,
@@ -218,10 +230,7 @@ def _merge_into_table(
             target, obs, item.key_fields, replace=item.replace_duplicates
         )
         try:
-            _overwrite_slice(
-                merged, obs_table_path, item, table_format,
-                expected_version=expected,
-            )
+            _overwrite_slice(merged, obs_table_path, expected_version=expected)
         except ConcurrentCommitError as e:
             last_conflict = e
             continue
@@ -260,268 +269,134 @@ def run_job(
     staging_dir: str = "staging",
     metadata_transport=None,
     batch_files: bool = False,
-    table_format: str = "snapshot",
     resume_ranges_bytes: int | None = None,
     ranges_per_commit: int | None = None,
 ) -> dict[str, MergeStats]:
     """Run every data_item/file, merging observations into the obs table.
 
-    Returns per-file MergeStats. Files already complete in the manifest are
-    skipped (resume contract). http(s) files are staged locally first
-    [reference: src/tapis_direct_driver.py:103-107]; manifest keys stay the
-    original URL so resume semantics are unchanged.
+    One loop: each data item's pending files are planned into byte-range
+    work units (:func:`plan_wide_units`), and each commit group of units is
+    parsed once (:func:`read_wide_units`), merged once
+    (:func:`_merge_into_table`, CAS redo included), published once, and
+    recorded once in the manifest. The modes only choose the groups:
+
+    - default: one group per file (a per-file manifest entry);
+    - ``batch_files``: one group for all of an item's pending files. The
+      returned stats repeat the batch totals per file; the manifest
+      records them once (under "__batches__") so its sums stay additive.
+      Files must be key-disjoint (e.g. distinct months), else the merge
+      raises RecordKeyError;
+    - ``resume_ranges_bytes`` (with a manifest): mid-file resume
+      [reference: README.md:41-43]. A local file LARGER than this is
+      tiled into newline-aligned ranges of ~this size (pinned in the
+      manifest on first contact); each group of ``ranges_per_commit``
+      pending ranges (default: the session's parallelism) commits and
+      records its ranges, so a crash resumes at the first unfinished
+      range. Returned stats cover this run's ranges only.
+
+    Files already complete in the manifest are skipped (resume contract);
+    merge-key idempotency makes a replayed group safe. A group of no
+    units (no in-range dates or no rows) publishes nothing but is still
+    recorded. http(s) files are staged locally [reference:
+    src/tapis_direct_driver.py:103-107] just before their group (a batch:
+    all up front), keeping the URL as manifest key. Paths the driver
+    cannot open (globs, hdfs:// URIs) take the declarative parse.
 
     ``metadata_transport``: optional zero-arg factory returning a sink
     transport (see operators.sinks). When given, each file's station
-    metadata branch is serialized as sparse JSON docs (nodata fields
-    dropped per record [reference: src/driver.py:144-152]) and written
-    through it with the chunked retrying writer.
-
-    ``batch_files``: scale mode -- all of a data item's pending files
-    ingest in ONE distributed plan (per-file header dispatch, see
-    observations_from_wide_many_fast) and merge once. The returned stats
-    repeat the batch totals per file; the MANIFEST records the totals
-    once (under "__batches__", per-file entries just point at the batch)
-    so manifest sums stay additive. Resume granularity is the batch.
-    Files must be
-    key-disjoint (e.g. distinct months) -- conflicting duplicate keys
-    across batched files raise RecordKeyError, matching the merge guard.
-    Requires a local/staged path per file; items that don't qualify fall
-    back to the sequential loop.
-
-    ``table_format``: layout for a NEW observation table -- "snapshot"
-    (default, transactional versioned manifest; read back via
-    ``read_table``) or "plain" (bare partitioned parquet, single-writer
-    only). An existing table always keeps its current layout.
-
-    ``resume_ranges_bytes``: mid-file resume [reference: README.md:41-43].
-    When set (and a manifest is given), a local file LARGER than this is
-    ingested as newline-aligned byte ranges of ~this size; each group of
-    ``ranges_per_commit`` ranges (default: the session's parallelism)
-    merges and commits as a unit, recording per-range completion in the
-    manifest. A crash mid-file then resumes at the first unfinished
-    range instead of re-parsing the whole file. Merge-key idempotency
-    keeps a replayed half-committed group safe.
+    metadata is written through it as sparse JSON docs (nodata fields
+    dropped [reference: src/driver.py:144-152]) before its first commit.
     """
     manifest = Manifest(manifest_path) if manifest_path else None
+    group_size = ranges_per_commit or spark.sparkContext.defaultParallelism
     results: dict[str, MergeStats] = {}
     for item in job.data:
-        if batch_files:
-            batched = _run_item_batched(
-                spark, job, item, obs_table_path, manifest, staging_dir,
-                metadata_transport, table_format,
-            )
-            if batched is not None:
-                results.update(batched)
-                continue
-        for file in item.files:
-            if manifest and manifest.is_complete(file):
-                continue
-            local = stage_if_remote(file, staging_dir)
+        pending = [f for f in item.files if not (manifest and manifest.is_complete(f))]
+        staged = {f: stage_if_remote(f, staging_dir) for f in pending} if batch_files else {}
+        batch = bool(staged) and all(os.path.isfile(p) for p in staged.values())
+        for files in [pending] if batch else [[f] for f in pending]:
+            paths = [staged.get(f) or stage_if_remote(f, staging_dir) for f in files]
+            split, done = None, set()
             if (
-                resume_ranges_bytes
-                and manifest
-                and os.path.isfile(local)
-                and os.path.getsize(local) > resume_ranges_bytes
+                resume_ranges_bytes and manifest and not batch
+                and os.path.isfile(paths[0])
+                and os.path.getsize(paths[0]) > resume_ranges_bytes
             ):
-                stats = _run_file_ranged(
-                    spark, job, item, file, local, obs_table_path, manifest,
-                    resume_ranges_bytes, ranges_per_commit,
-                    metadata_transport, table_format,
+                prior = manifest.range_state(files[0])
+                split, done = prior["split_bytes"] or resume_ranges_bytes, prior["ranges"]
+            if os.path.isfile(paths[0]):
+                units, layouts = plan_wide_units(spark, paths, item, split)
+                units = [u for u in units if f"{u[1]}-{u[2]}" not in done]
+                size = group_size if split else max(1, len(units))
+                groups = [units[i : i + size] for i in range(0, len(units), size)]
+                metas = (
+                    metadata_from_wide(
+                        scan_wide_csv(spark, p, layouts[p].columns),
+                        classify_headers(layouts[p].columns, item)[0],
+                        job.location,
+                    )
+                    for p in paths
                 )
-                results[file] = stats
-                continue
-            obs, meta = ingest_wide_csv(spark, local, item, job.location)
-            if metadata_transport is not None:
-                from station_data_ingestion_spark.operators.sinks import (
-                    sparse_json_docs,
-                    write_docs,
-                )
-
+            else:  # glob / hdfs:// path: the declarative parse, one group
+                obs, meta = ingest_wide_csv(spark, paths[0], item, job.location)
+                groups, metas = [None], [meta]
+            for meta in (metas if metadata_transport is not None and not done else ()):
                 write_docs(
                     sparse_json_docs(meta, nodata=item.nodata),
                     metadata_transport,
                     retries=job.retries,
                     max_parallelism=job.concurrency,
                 )
-            stats = _merge_into_table(
-                spark, obs, item, obs_table_path, table_format
-            )
-            results[file] = stats
-            if manifest:
-                manifest.mark_complete(file, stats)
+            total = MergeStats(created=0, replaced=0)
+            for i, group in enumerate(groups):
+                if group is not None:
+                    obs = read_wide_units(spark, group, layouts, item)
+                stats = _merge_into_table(spark, obs, item, obs_table_path)
+                total = MergeStats(
+                    created=total.created + stats.created,
+                    replaced=total.replaced + stats.replaced,
+                )
+                if split:
+                    manifest.mark_ranges_complete(
+                        files[0], [f"{s}-{e}" for _p, s, e in group], stats, split,
+                        complete=i == len(groups) - 1,
+                    )
+            # a group with no units merges nothing but is still recorded
+            if split and not groups:
+                manifest.mark_ranges_complete(files[0], [], total, split, complete=True)
+            elif manifest and batch:
+                manifest.mark_batch_complete(files, total)
+            elif manifest and not split:
+                manifest.mark_complete(files[0], total)
+            results.update({f: total for f in files})
     return results
-
-
-def _run_file_ranged(
-    spark: SparkSession,
-    job: JobSpec,
-    item: DataItemSpec,
-    file: str,
-    local: str,
-    obs_table_path: str,
-    manifest: Manifest,
-    resume_ranges_bytes: int,
-    ranges_per_commit: int | None,
-    metadata_transport,
-    table_format: str,
-) -> MergeStats:
-    """Ingest one huge file as resumable byte-range groups (see run_job).
-
-    The range tiling is pinned to the split size recorded in the manifest
-    on first contact, so a changed config can never mis-align a resume.
-    Stats cover THIS run's ranges only (previously-completed ranges keep
-    their recorded stats; the file entry rolls up the grand total).
-    """
-    from station_data_ingestion_spark.sources.wide_csv import (
-        observations_from_wide_ranges,
-        plan_file_ranges,
-    )
-
-    prior = manifest.range_state(file)
-    split_bytes = prior["split_bytes"] or resume_ranges_bytes
-    done = prior["ranges"]
-    ranges = plan_file_ranges(local, split_bytes)
-    pending = [r for r in ranges if f"{r[0]}-{r[1]}" not in done]
-
-    if metadata_transport is not None and not done:
-        # metadata derives from the whole (small-rowcount) station axis;
-        # emit it once, before any range completes
-        from station_data_ingestion_spark.operators.sinks import (
-            sparse_json_docs,
-            write_docs,
-        )
-        from station_data_ingestion_spark.sources.wide_csv import (
-            classify_headers,
-            metadata_from_wide,
-            read_header,
-            scan_wide_csv,
-        )
-
-        columns = read_header(spark, local)
-        meta_renames, _dates = classify_headers(columns, item)
-        meta = metadata_from_wide(
-            scan_wide_csv(spark, local, columns), meta_renames, job.location
-        )
-        write_docs(
-            sparse_json_docs(meta, nodata=item.nodata),
-            metadata_transport,
-            retries=job.retries,
-            max_parallelism=job.concurrency,
-        )
-
-    group_size = ranges_per_commit or spark.sparkContext.defaultParallelism
-    created = replaced = 0
-    for i in range(0, len(pending), group_size):
-        group = pending[i : i + group_size]
-        obs = observations_from_wide_ranges(spark, local, group, item)
-        if obs is None:
-            break  # no in-range date columns: nothing to ingest
-        stats = _merge_into_table(spark, obs, item, obs_table_path, table_format)
-        created += stats.created
-        replaced += stats.replaced
-        manifest.mark_ranges_complete(
-            file, [f"{r[0]}-{r[1]}" for r in group], stats, split_bytes
-        )
-    total = MergeStats(
-        created=created + prior["created"], replaced=replaced + prior["replaced"]
-    )
-    manifest.mark_complete(file, total)
-    return MergeStats(created=created, replaced=replaced)
-
-
-def _run_item_batched(
-    spark: SparkSession,
-    job: JobSpec,
-    item: DataItemSpec,
-    obs_table_path: str,
-    manifest,
-    staging_dir: str,
-    metadata_transport,
-    table_format: str = "snapshot",
-) -> dict[str, MergeStats] | None:
-    """One-plan ingest+merge of an item's pending files (see run_job).
-
-    Returns None when the batch path doesn't apply (no pending files ->
-    empty dict; staging or header classification finds nothing usable ->
-    None, caller falls back to the per-file loop).
-    """
-    from station_data_ingestion_spark.sources.wide_csv import (
-        observations_from_wide_many_fast,
-    )
-
-    pending = [
-        f for f in item.files if not (manifest and manifest.is_complete(f))
-    ]
-    if not pending:
-        return {}
-    local_by_file = {f: stage_if_remote(f, staging_dir) for f in pending}
-    obs = observations_from_wide_many_fast(
-        spark, list(local_by_file.values()), item
-    )
-    if obs is None:
-        return None
-    if metadata_transport is not None:
-        from station_data_ingestion_spark.operators.sinks import (
-            sparse_json_docs,
-            write_docs,
-        )
-        from station_data_ingestion_spark.sources.wide_csv import (
-            classify_headers,
-            metadata_from_wide,
-            read_header,
-            scan_wide_csv,
-        )
-
-        for local in local_by_file.values():
-            # metadata branch only: no need to build (and discard) the
-            # observation plan that ingest_wide_csv would also produce
-            columns = read_header(spark, local)
-            meta_renames, _dates = classify_headers(columns, item)
-            meta = metadata_from_wide(
-                scan_wide_csv(spark, local, columns), meta_renames, job.location
-            )
-            write_docs(
-                sparse_json_docs(meta, nodata=item.nodata),
-                metadata_transport,
-                retries=job.retries,
-                max_parallelism=job.concurrency,
-            )
-    stats = _merge_into_table(spark, obs, item, obs_table_path, table_format)
-    if manifest:
-        manifest.mark_batch_complete(pending, stats)
-    return {f: stats for f in pending}
 
 
 def _overwrite_slice(
     merged: DataFrame,
     table_path: str,
-    item: DataItemSpec,
-    table_format: str = "snapshot",
     expected_version: int | None = None,
 ) -> None:
     """Overwrite only the merged (datatype, period) partition slice.
 
-    Layout auto-detects from what's on disk (an existing table keeps its
-    format); a NEW table uses ``table_format``:
+    Layout auto-detects from what's on disk:
 
-    - "snapshot" (default): transactional versioned-snapshot commit
-      (plans.snapshot_store) -- new files + atomic manifest publish, so
-      concurrent readers always see a complete version and a crash
-      mid-commit leaves the previous snapshot intact. Also safe on object
-      stores with no atomic directory rename. Read it back with
+    - a new table, or an existing snapshot table: transactional
+      versioned-snapshot commit (plans.snapshot_store) -- new files +
+      atomic manifest publish, so readers always see a complete version
+      and a crash mid-commit leaves the previous one intact (also on
+      object stores). Read it back with
       :func:`station_data_ingestion_spark.read_table`.
-    - "plain": Spark dynamic partition overwrite. One local/HDFS writer
-      only: the merged plan reads the same path it rewrites, and a reader
-      listing the directory mid-swap can see a torn state.
+    - an existing plain parquet table keeps its layout: Spark dynamic
+      partition overwrite. One local/HDFS writer only: the merged plan
+      reads the same path it rewrites, and a reader listing the
+      directory mid-swap can see a torn state.
     """
     from station_data_ingestion_spark.plans.snapshot_store import SnapshotTable
 
     spark = merged.sparkSession
     snap = SnapshotTable(spark, table_path, OBS_PARTITION_COLS)
-    if snap.exists() or (
-        table_format == "snapshot" and not _table_has_parquet(spark, table_path)
-    ):
+    if snap.exists() or not _table_has_parquet(spark, table_path):
         # NOT clustered: repartitionByRange samples its child plan, which
         # would evaluate the merge plan (and its created/replaced stat
         # aggregation) twice. Zone-map stats still record; a maintenance

@@ -2,15 +2,11 @@
 
 The reference streams remote CSVs over HTTP line-by-line
 [reference: src/tapis_direct_driver.py:103-107, src/driver.py:140-141].
-Spark's CSV reader has no native http:// filesystem, so the idiomatic
-equivalent is a driver-side staging fetch: download once into a staging
-directory (shared storage on a real cluster), then let the distributed
-CSV scan split the staged file normally. Downloads reuse the sink stack's
-backoff-retry schedule [src/modules/ingestion_handler.py:70-78].
-
-At 100 TB ingestion the staging copy is the right trade anyway: executors
-re-read the data many times (scan retries, AQE re-plans), and ranged
-parallel reads need a seekable store, not a one-shot HTTP stream.
+Here the runner downloads each file once into a staging directory (shared
+storage on a real cluster) and parses the staged copy as byte-range work
+units: ranged parallel reads and task retries need a seekable store, not a
+one-shot HTTP stream. Downloads reuse the sink stack's backoff-retry
+schedule [src/modules/ingestion_handler.py:70-78].
 """
 
 from __future__ import annotations
@@ -66,109 +62,3 @@ def stage_if_remote(
 
     with_retries(fetch, retries=retries)
     return dest
-
-
-def _fetch_first_line(url: str, timeout: float) -> str:
-    """Read just the header line of a remote CSV (driver-side, tiny)."""
-    with urllib.request.urlopen(url, timeout=timeout) as resp:
-        buf = b""
-        while b"\n" not in buf:
-            chunk = resp.read(64 * 1024)
-            if not chunk:
-                break
-            buf += chunk
-    return buf.split(b"\n", 1)[0].decode("utf-8", errors="replace").rstrip("\r")
-
-
-def ingest_remote_wide_csvs(
-    spark,
-    urls: list[str],
-    spec,
-    retries: int = 3,
-    timeout: float = 60.0,
-):
-    """Distributed remote ingestion: executors fetch AND parse the URLs.
-
-    The reference streams one remote CSV at a time through the driver
-    process [reference: src/tapis_direct_driver.py:103-107]; staging
-    (stage_if_remote) keeps that shape but still funnels every byte
-    through one machine. For thousands of monthly station files the
-    dominant parallel axis is ACROSS files: here each executor task
-    fetches its URL (with the sink stack's backoff retries) and parses
-    it with the shared Arrow parse core -- no bytes ever pass through
-    the driver, which only reads one header line per URL to classify
-    columns.
-
-    Granularity is one task per URL (no intra-file split), so use this
-    for many moderate files; a single huge file is better staged to
-    shared storage and read with the splittable fast path.
-
-    Returns the long observation DataFrame, or None if no URL has
-    in-range date columns.
-    """
-    from pyspark.sql import functions as F
-
-    from station_data_ingestion_spark.sources.wide_csv import (
-        _parse_wide_csv_bytes,
-        classify_header_line,
-    )
-
-    configs: dict[str, tuple[str, list[str], list[str], list[str]]] = {}
-    for u in urls:
-        header_line = with_retries(
-            lambda u=u: _fetch_first_line(u, timeout), retries=retries
-        )
-        cfg = classify_header_line(header_line, spec)
-        if cfg is None:
-            raise ValueError(
-                f"wide matrix is missing the SKN station-id column: {u}"
-            )
-        cols, date_cols, iso = cfg
-        if not date_cols:
-            continue  # nothing in range to contribute
-        configs[u] = (header_line, cols, date_cols, iso)
-    if not configs:
-        return None
-    nodata = spec.nodata
-
-    def fetch_parse(batches):
-        import urllib.request  # worker-side: the pickled global is the bare package
-
-        for pdf in batches:
-            for u in pdf["url"]:
-                header_line, cols, dcols, iso = configs[u]
-                body: dict[str, bytes] = {}
-
-                def fetch(u=u):
-                    with urllib.request.urlopen(u, timeout=timeout) as resp:
-                        body["b"] = resp.read()
-
-                with_retries(fetch, retries=retries)
-                # Drop every header occurrence (incl. mid-file repeats in
-                # concatenated exports), matching the local fast path.
-                header_b = header_line.encode("utf-8")
-                lines = [
-                    ln
-                    for ln in body["b"].split(b"\n")
-                    if ln.rstrip(b"\r") != header_b
-                ]
-                out = _parse_wide_csv_bytes(
-                    b"\n".join(lines), cols, dcols, iso, nodata
-                )
-                if out is not None:
-                    yield out
-
-    # Exactly one URL per partition (round-robin repartition does NOT
-    # guarantee 1:1 placement): parallelize with numSlices = |urls|.
-    url_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(u,) for u in configs], numSlices=len(configs)
-        ),
-        "url string",
-    )
-    base = url_df.mapInPandas(
-        fetch_parse, "station_id string, date string, value double"
-    )
-    for k, v in spec.static_properties.items():
-        base = base.withColumn(k, F.lit(v).cast("string"))
-    return base

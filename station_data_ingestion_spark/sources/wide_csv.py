@@ -1,19 +1,19 @@
 """Wide station-matrix CSV source -> long observation / metadata DataFrames.
 
 The reference's whole dataflow essence [reference: src/driver.py:136-170,
-src/tapis_direct_driver.py:84-184] re-expressed as one declarative Spark
-program:
+src/tapis_direct_driver.py:84-184]:
 
-    scan(all-string) -> header classify (driver-side, on names only)
-    -> select (column prune happens in Catalyst before the scan)
-    -> unpivot (wide->long)  -> filter(value != nodata)
+    header classify (driver-side, on names only) -> prune date columns
+    -> unpivot (wide->long) -> filter(value != nodata)
     -> strict cast to double -> attach literal columns
 
-Scale notes (100 TB): a station matrix is wide but the long output is what
-shuffles; the unpivot is narrow (no shuffle) and pipelined inside
-whole-stage codegen. Column pruning is decided driver-side from the header
-so Spark's CSV scan only parses the needed columns. Many files parallelize
-by Spark's file-splitting; one giant file splits by line ranges.
+One ingestion path runs it for every file the driver can open:
+:func:`plan_wide_units` (driver) parses each header once and cuts files
+into ``(path, start, end)`` byte-range work units (also the runner's unit
+of resume); :func:`read_wide_units` (executors) parses them with pyarrow's
+C++ CSV parser. The declarative :func:`observations_from_wide` is the
+streaming transform, the test reference, and the fallback for paths the
+driver cannot open (globs, directories, hdfs:// URIs).
 
 Semantic traps handled (SURVEY §7):
 - nodata is a STRING sentinel compared post-read, never null
@@ -28,22 +28,25 @@ Semantic traps handled (SURVEY §7):
 
 from __future__ import annotations
 
+import csv
 import os
+from collections import Counter
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from station_data_ingestion_spark.functions.dates import header_to_iso, is_date_header
+from station_data_ingestion_spark.plans.jobspec import (
+    METADATA_COL_TRANSLATIONS,
+    DataItemSpec,
+)
 
 
 def _c(name: str) -> F.Column:
     """Column ref for raw header names, which may contain dots (ELEV.m.)."""
     return F.col(f"`{name}`")
-from station_data_ingestion_spark.plans.jobspec import (
-    METADATA_COL_TRANSLATIONS,
-    DataItemSpec,
-)
 
 
 def read_header(spark: SparkSession, path: str) -> list[str]:
@@ -171,9 +174,8 @@ def _parse_wide_csv_bytes(
     dcols: list[str],
     iso_dates: list[str],
     nodata: str,
-    skip_rows: int = 0,
 ):
-    """Shared Arrow parse core: wide-CSV bytes -> long pandas frame.
+    """Arrow parse core of the unit reader: wide-CSV bytes -> long pandas frame.
 
     pyarrow.csv C++ parse with all-string columns (no null coercion, so
     the nodata sentinel survives literally), column-major unpivot as an
@@ -184,17 +186,13 @@ def _parse_wide_csv_bytes(
     partial-row zip [reference: src/tapis_direct_driver.py:134-139] --
     their present in-range cells ARE ingested.
 
-    DOCUMENTED DIVERGENCE (both engine paths, deliberately): a genuinely
-    EMPTY in-range cell is dropped as missing, where the reference raises
-    (float('') is a ValueError [src/tapis_direct_driver.py:145]).
-    Raising would contradict the pad/truncate contract above -- padded
-    short rows fill missing cells with '' -- and drop-as-missing is the
-    more useful semantic for sparse station matrices. Whitespace-only
-    cells still raise on both paths (they survive the '' filter and fail
-    the numeric cast).
+    DOCUMENTED DIVERGENCE (both engine paths, deliberately): an EMPTY
+    in-range cell is dropped as missing, where the reference raises
+    (float('') [src/tapis_direct_driver.py:145]); raising would contradict
+    the pad/truncate contract, whose padded cells are ''. Whitespace-only
+    cells still raise on both paths (they fail the numeric cast).
     Runs inside executors; returns None when nothing survives.
     """
-    import csv as _csv
     import io
 
     import pyarrow as pa
@@ -211,7 +209,7 @@ def _parse_wide_csv_bytes(
 
     tbl = pacsv.read_csv(
         io.BytesIO(buf),
-        read_options=pacsv.ReadOptions(column_names=cols, skip_rows=skip_rows),
+        read_options=pacsv.ReadOptions(column_names=cols),
         parse_options=pacsv.ParseOptions(invalid_row_handler=_keep_invalid),
         convert_options=pacsv.ConvertOptions(
             column_types={c: pa.string() for c in include},
@@ -227,7 +225,7 @@ def _parse_wide_csv_bytes(
         for line in invalid_lines:
             if not line:
                 continue
-            fields = next(_csv.reader([line]))
+            fields = next(csv.reader([line]))
             padded.append((fields + [""] * len(cols))[: len(cols)])
         if padded:
             extra = pa.table(
@@ -271,79 +269,13 @@ def _parse_wide_csv_bytes(
     ).to_pandas()
 
 
-def observations_from_wide_fast(
-    spark: SparkSession,
-    path: str,
-    columns: list[str],
-    date_cols: list[str],
-    spec: DataItemSpec,
-) -> DataFrame | None:
-    """Arrow-native wide->long fast path: text-line splits + pyarrow.csv.
-
-    Same output schema and semantics as :func:`observations_from_wide`
-    (nodata/empty filter, strict raise-on-garbage cast, PERMISSIVE-style
-    pad/truncate of wrong-width rows, static property columns) with one
-    documented divergence: a mid-file line identical to the header is
-    treated as a header (dropped) rather than a strict-cast error --
-    the concatenated-files case.
-
-    Why this exists: the declarative path builds a |date_cols|-wide
-    map_from_arrays projection whose generated code grows linearly with
-    the matrix width, and parses every cell as a JVM UTF8String. Here the
-    file is read as raw line splits (spark.read.text -- still distributed
-    by HDFS-style line ranges, so a huge file fans out across executors)
-    and each Arrow batch of lines goes through pyarrow.csv's C++ parser;
-    the unpivot is a column-stack + sentinel filter + strict cast done
-    entirely in Arrow compute. Constant plan size, no per-cell JVM
-    objects, one Python worker pass.
-
-    Returns None when the path is not a plain local file (glob/dir/URI) --
-    callers then use the declarative path. Quoted embedded newlines are
-    not supported here (same limitation as the reference's line-streamed
-    HTTP scan [src/tapis_direct_driver.py:104-107]).
-    """
-    if not date_cols or "SKN" not in columns or not os.path.isfile(path):
-        return None
-    with open(path, "rb") as f:
-        header_line = f.readline().decode("utf-8", errors="replace").rstrip("\r\n")
-    col_names = list(columns)
-    dcols = list(date_cols)
-    iso_dates = [header_to_iso(c, spec.period) for c in dcols]
-    nodata = spec.nodata
-
-    def parse_lines(batches):
-        for pdf in batches:
-            lines = pdf["value"]
-            lines = lines[lines != header_line]
-            if lines.empty:
-                continue
-            buf = ("\n".join(lines.tolist()) + "\n").encode("utf-8")
-            out = _parse_wide_csv_bytes(buf, col_names, dcols, iso_dates, nodata)
-            if out is not None:
-                yield out
-
-    lines_df = spark.read.text(path)
-    parallelism = spark.sparkContext.defaultParallelism
-    if len(dcols) > 50 and lines_df.rdd.getNumPartitions() < parallelism:
-        # Same rationale as the declarative path: spread the few, wide
-        # pre-expansion lines before the ~|date_cols|x fan-out.
-        lines_df = lines_df.repartition(parallelism)
-    base = lines_df.mapInPandas(
-        parse_lines, "station_id string, date string, value double"
-    )
-    for k, v in spec.static_properties.items():
-        base = base.withColumn(k, F.lit(v).cast("string"))
-    return base
-
-
 def plan_file_ranges(path: str, split_bytes: int) -> list[tuple[int, int]]:
     """Tile a CSV file into newline-aligned byte ranges after the header.
 
     The distributed analog of the reference's in-file byte-position resume
     cursor [reference: README.md:41-43]: each range is a unit of resume
     (and of parallelism). Ranges are contiguous, start at the first data
-    byte, and every boundary falls just after a ``\\n``, so each range is
-    exactly whole lines. Driver cost is one seek + short read per range.
+    byte, and end just after a ``\\n``: whole lines, one seek each.
     """
     size = os.path.getsize(path)
     ranges: list[tuple[int, int]] = []
@@ -363,168 +295,147 @@ def plan_file_ranges(path: str, split_bytes: int) -> list[tuple[int, int]]:
     return ranges
 
 
-def observations_from_wide_ranges(
-    spark: SparkSession,
-    path: str,
-    ranges: list[tuple[int, int]],
-    spec: DataItemSpec,
-) -> DataFrame | None:
-    """Parse ONLY the given byte ranges of one wide CSV, distributed.
-
-    One task per range; each seeks into the file and runs the same
-    pyarrow.csv parse as :func:`observations_from_wide_fast`, so resuming
-    a partially-ingested 500 GB file re-reads only its unfinished ranges.
-    Requires the path to be readable from executors (shared FS -- the
-    same contract as the other local fast paths). Returns None when the
-    file has no in-range date columns.
-    """
-    with open(path, "rb") as f:
-        header_line = f.readline().decode("utf-8", errors="replace").rstrip("\r\n")
-    cfg = classify_header_line(header_line, spec)
-    if cfg is None:
-        raise ValueError(f"wide matrix is missing the SKN station-id column: {path}")
-    cols, dcols, iso_dates = cfg
-    if not dcols:
-        return None
-    nodata = spec.nodata
-
-    def parse_ranges(batches):
-        for pdf in batches:
-            for p, s, e in zip(pdf["path"], pdf["start"], pdf["end"]):
-                with open(p, "rb") as f:
-                    f.seek(int(s))
-                    raw = f.read(int(e) - int(s))
-                lines = [
-                    ln for ln in raw.decode("utf-8", errors="replace").splitlines()
-                    if ln != header_line
-                ]
-                if not lines:
-                    continue
-                buf = ("\n".join(lines) + "\n").encode("utf-8")
-                out = _parse_wide_csv_bytes(buf, cols, dcols, iso_dates, nodata)
-                if out is not None:
-                    yield out
-
-    rows = [(path, int(s), int(e)) for s, e in ranges]
-    rdf = spark.createDataFrame(
-        rows, "path string, start long, end long"
-    ).repartition(max(1, len(rows)))
-    base = rdf.mapInPandas(
-        parse_ranges, "station_id string, date string, value double"
-    )
-    for k, v in spec.static_properties.items():
-        base = base.withColumn(k, F.lit(v).cast("string"))
-    return base
+# Bytes of whole lines one reader task parses at a time: ~4k rows of a
+# 365-column matrix, under a 10k-line Arrow batch of the same file.
+_READ_CHUNK_BYTES = 8 << 20
 
 
-def observations_from_wide_many_fast(
-    spark: SparkSession, paths: list[str], spec: DataItemSpec
-) -> DataFrame | None:
-    """Batch ingestion: MANY wide CSVs in ONE distributed plan.
+class WideLayout(NamedTuple):
+    """One file's header, parsed once on the driver."""
 
-    The reference (and the faithful per-file runner loop) ingests files
-    sequentially [reference: src/driver.py:136-141, utils/task.sh:8-15];
-    at 100 TB / thousands of monthly files that serializes job scheduling.
-    This operator reads every file in a single ``spark.read.text`` scan
-    (splittable per file AND within large files) and dispatches each line
-    to its own file's header layout via ``input_file_name()`` -- files may
-    have entirely different date columns. Parsing per Arrow batch is the
-    same pyarrow.csv path as :func:`observations_from_wide_fast`.
-
-    Cells from different files with the SAME composite key are NOT
-    deduplicated here (the sequential loop resolves them by merge order);
-    callers batching overlapping files should dedup before merging.
-    Wrong-width rows pad/truncate to their file's header width
-    (PERMISSIVE parity, see :func:`_parse_wide_csv_bytes`).
-
-    Returns None if any path is not a plain local file (stage remote
-    files first) or no file has in-range date columns.
-    """
-    if not paths or not all(os.path.isfile(p) for p in paths):
-        return None
-    # Driver-side: one tiny header read per file -> per-file parse config.
-    # A file whose station-id column can't be identified RAISES (like the
-    # sequential path) -- silently skipping it would let callers mark the
-    # file ingested when it never was. Files with no in-range date
-    # columns legitimately contribute nothing and are excluded from the
-    # scan.
-    configs: dict[str, tuple[str, list[str], list[str], list[str]]] = {}
-    for p in paths:
-        with open(p, "rb") as f:
-            header_line = f.readline().decode("utf-8", errors="replace").rstrip("\r\n")
-        cfg = classify_header_line(header_line, spec)
-        if cfg is None:
-            raise ValueError(
-                f"wide matrix is missing the SKN station-id column: {p}"
-            )
-        cols, date_cols, iso = cfg
-        if not date_cols:
-            continue  # nothing to contribute
-        configs[os.path.abspath(p)] = (header_line, cols, date_cols, iso)
-    if not configs:
-        return None
-    nodata = spec.nodata
-
-    def parse_many(batches):
-        import urllib.parse
-
-        def local_path(uri: str) -> str:
-            return urllib.parse.unquote(urllib.parse.urlparse(uri).path)
-
-        for pdf in batches:
-            for uri, group in pdf.groupby("_file", sort=False):
-                cfg = configs.get(local_path(uri))
-                if cfg is None:
-                    continue
-                header_line, cols, dcols, iso_dates = cfg
-                lines = group["value"]
-                lines = lines[lines != header_line]
-                if lines.empty:
-                    continue
-                buf = ("\n".join(lines.tolist()) + "\n").encode("utf-8")
-                out = _parse_wide_csv_bytes(buf, cols, dcols, iso_dates, nodata)
-                if out is not None:
-                    yield out
-
-    lines_df = spark.read.text(list(configs)).select(
-        F.input_file_name().alias("_file"), "value"
-    )
-    parallelism = spark.sparkContext.defaultParallelism
-    if lines_df.rdd.getNumPartitions() < parallelism:
-        lines_df = lines_df.repartition(parallelism)
-    base = lines_df.mapInPandas(
-        parse_many, "station_id string, date string, value double"
-    )
-    for k, v in spec.static_properties.items():
-        base = base.withColumn(k, F.lit(v).cast("string"))
-    return base
+    header_line: str
+    columns: list[str]
+    date_cols: list[str]
+    iso_dates: list[str]
 
 
-def _csv_iter(lines):
-    import csv
-
-    return csv.reader(lines)
-
-
-def classify_header_line(
-    header_line: str, spec: DataItemSpec
-) -> tuple[list[str], list[str], list[str]] | None:
-    """One header line -> (columns, in-range date columns, iso dates).
+def classify_header_line(header_line: str, spec: DataItemSpec) -> WideLayout:
+    """One header line -> its :class:`WideLayout` (in-range date columns).
 
     Applies the positional id_col -> SKN rename when the literal header
-    is absent [reference: src/tapis_direct_driver.py:54-56]. Returns
-    None when no station-id column can be identified (unusable file).
-    Shared by the batch and remote ingestion paths so their header
-    handling can never diverge.
+    is absent [reference: src/tapis_direct_driver.py:54-56]. Raises
+    ValueError when there is no station-id column, or when a column that
+    is read (SKN, metadata, in-range date) repeats: Spark's reader would
+    silently rename both copies out of the date range. Blank or repeated
+    names of unread columns become ``_c<index>``, as in Spark's reader.
     """
-    cols = next(_csv_iter([header_line]), [])
+    cols = next(csv.reader([header_line]), [])
     if "SKN" not in cols and 0 <= spec.id_col < len(cols):
         cols = list(cols)
         cols[spec.id_col] = "SKN"
     if "SKN" not in cols:
-        return None
-    _meta, date_cols = classify_headers(cols, spec)
-    return cols, date_cols, [header_to_iso(c, spec.period) for c in date_cols]
+        raise ValueError("wide matrix is missing the SKN station-id column")
+    meta, date_cols = classify_headers(cols, spec)
+    read = {"SKN", *meta, *date_cols}
+    counts = Counter(cols)
+    repeated = sorted(c for c in read if counts[c] > 1)
+    if repeated:
+        raise ValueError(f"wide matrix header repeats column(s) {repeated}")
+    cols = [c if c and counts[c] == 1 else f"_c{i}" for i, c in enumerate(cols)]
+    iso = [header_to_iso(c, spec.period) for c in date_cols]
+    return WideLayout(header_line, cols, date_cols, iso)
+
+
+def plan_wide_units(
+    spark: SparkSession,
+    paths: list[str],
+    spec: DataItemSpec,
+    split_bytes: int | None = None,
+) -> tuple[list[tuple[str, int, int]], dict[str, WideLayout]]:
+    """Driver-side planner: local files -> ``(path, start, end)`` work units.
+
+    Reads each header with ``open()`` (no Spark job) and tiles each body
+    with :func:`plan_file_ranges`: into ``split_bytes`` ranges when given
+    (the manifest-pinned resume tiling, never moved by a conf), else into
+    ranges of at most ``spark.sql.files.maxPartitionBytes``, each cut into
+    ``defaultParallelism`` ranges when the file has more than 50 in-range
+    date columns (spreads the few wide rows before the ~|date_cols|x
+    fan-out). A file with no in-range date columns gets no units.
+    """
+    parallelism = spark.sparkContext.defaultParallelism
+    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    units: list[tuple[str, int, int]] = []
+    layouts: dict[str, WideLayout] = {}
+    for path in paths:
+        with open(path, "rb") as f:
+            header_line = f.readline().decode("utf-8", errors="replace").rstrip("\r\n")
+        try:
+            layouts[path] = layout = classify_header_line(header_line, spec)
+        except ValueError as e:
+            raise ValueError(f"{e}: {path}") from None
+        if not layout.date_cols:
+            continue
+        split = split_bytes
+        if split is None:
+            split = min(os.path.getsize(path), max_bytes)
+            if len(layout.date_cols) > 50:
+                split = -(-split // parallelism)
+        units += [(path, s, e) for s, e in plan_file_ranges(path, split)]
+    return units, layouts
+
+
+def read_wide_units(
+    spark: SparkSession,
+    units: list[tuple[str, int, int]],
+    layouts: dict[str, WideLayout],
+    spec: DataItemSpec,
+) -> DataFrame:
+    """Unit reader: parse byte-range units into long observations.
+
+    Same output schema and semantics as :func:`observations_from_wide`
+    (nodata/empty filter, strict raise-on-garbage cast, PERMISSIVE-style
+    pad/truncate of wrong-width rows, static property columns) with one
+    documented divergence: a mid-file line identical to the header is
+    dropped rather than a strict-cast error (the concatenated-files case).
+
+    Units are addressed by id from a ``spark.range`` (one row per unit,
+    at most ``defaultParallelism`` partitions, no Exchange); each task
+    seeks into its file and runs pyarrow.csv's C++ parse
+    (:func:`_parse_wide_csv_bytes`) on whole-line chunks of about
+    ``_READ_CHUNK_BYTES``, so its memory is bounded whatever the unit size.
+    Paths must be readable from executors (shared FS). Quoted embedded
+    newlines are not supported (nor by the reference's line-streamed HTTP
+    scan [src/tapis_direct_driver.py:104-107]).
+    """
+    layouts = {p: layouts[p] for p, _s, _e in units}
+    nodata, chunk = spec.nodata, _READ_CHUNK_BYTES
+
+    def read_chunks(path, start, end):
+        # units end just after a newline (or at EOF), so completing the
+        # last line of a chunk with readline never reads past ``end``
+        with open(path, "rb") as f:
+            f.seek(start)
+            while f.tell() < end:
+                raw = f.read(min(chunk, end - f.tell()))
+                yield (raw + f.readline()) if f.tell() < end else raw
+
+    def parse_units(batches):
+        for pdf in batches:
+            for uid in pdf["id"]:
+                path, start, end = units[uid]
+                layout = layouts[path]
+                for raw in read_chunks(path, start, end):
+                    lines = [
+                        ln for ln in raw.decode("utf-8", errors="replace").splitlines()
+                        if ln != layout.header_line
+                    ]
+                    if not lines:
+                        continue
+                    buf = ("\n".join(lines) + "\n").encode("utf-8")
+                    out = _parse_wide_csv_bytes(
+                        buf, layout.columns, layout.date_cols, layout.iso_dates, nodata
+                    )
+                    if out is not None:
+                        yield out
+
+    n = len(units)
+    ids = spark.range(
+        n, numPartitions=max(1, min(n, spark.sparkContext.defaultParallelism))
+    )
+    base = ids.mapInPandas(parse_units, "station_id string, date string, value double")
+    for k, v in spec.static_properties.items():
+        base = base.withColumn(k, F.lit(v).cast("string"))
+    return base
 
 
 def metadata_from_wide(df: DataFrame, meta_renames: dict[str, str], location: str) -> DataFrame:
@@ -558,34 +469,32 @@ def ingest_wide_csv(
     [reference: src/tapis_direct_driver.py:54-56, README.md:36] and that
     column is treated as SKN.
 
-    With ``fast`` (default), the observation branch uses the Arrow-native
-    parse path (:func:`observations_from_wide_fast`) when applicable; the
-    metadata branch always reads via the JVM CSV scan, which Catalyst
+    A file the driver can ``open()`` is planned with
+    :func:`plan_wide_units` and, with ``fast`` (default), parsed by
+    :func:`read_wide_units`. Other paths (globs, directories, hdfs:// URIs)
+    and ``fast=False`` use the declarative :func:`observations_from_wide`.
+    The metadata branch always reads via the JVM CSV scan, which Catalyst
     prunes to just the metadata columns.
     """
-    columns = read_header(spark, path)
-    if "SKN" not in columns and 0 <= spec.id_col < len(columns):
-        columns = list(columns)
-        columns[spec.id_col] = "SKN"
+    local = os.path.isfile(path)
+    if local:
+        units, layouts = plan_wide_units(spark, [path], spec)
+        columns = layouts[path].columns
+    else:
+        columns = read_header(spark, path)
+        if "SKN" not in columns and 0 <= spec.id_col < len(columns):
+            columns = list(columns)
+            columns[spec.id_col] = "SKN"
     meta_renames, date_cols = classify_headers(columns, spec)
-    obs = (
-        observations_from_wide_fast(spark, path, columns, date_cols, spec)
-        if fast
-        else None
-    )
-    if obs is not None:
-        meta = metadata_from_wide(scan_wide_csv(spark, path, columns), meta_renames, location)
-        return obs, meta
-    needed = list(meta_renames) + date_cols
-    df = scan_wide_csv(spark, path, columns).select(*[_c(c) for c in needed])
+    df = scan_wide_csv(spark, path, columns)
+    meta = metadata_from_wide(df, meta_renames, location)
+    if local and fast:
+        return read_wide_units(spark, units, layouts, spec), meta
+    df = df.select(*[_c(c) for c in list(meta_renames) + date_cols])
     # One small CSV = one input split, but the unpivot fans each wide row
-    # out ~|date_cols| times: spread the (few, narrow) wide rows across the
-    # cluster BEFORE the expansion. Round-robin of pre-expansion rows is
-    # cheap; at 100 TB many files already give enough splits and AQE
-    # coalesces the extra exchange away.
+    # out ~|date_cols| times: spread the few wide rows BEFORE the expansion
+    # (many files already give enough splits; AQE coalesces the exchange).
     parallelism = spark.sparkContext.defaultParallelism
     if len(date_cols) > 50 and df.rdd.getNumPartitions() < parallelism:
         df = df.repartition(parallelism)
-    obs = observations_from_wide(df, date_cols, spec)
-    meta = metadata_from_wide(df, meta_renames, location)
-    return obs, meta
+    return observations_from_wide(df, date_cols, spec), meta

@@ -20,12 +20,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from station_data_ingestion_spark.operators.merge import merge_observed
 from station_data_ingestion_spark.plans.jobspec import DataItemSpec
-from station_data_ingestion_spark.plans.runner import read_obs_table, _overwrite_slice
+from station_data_ingestion_spark.plans.runner import _merge_into_table
 from station_data_ingestion_spark.sources.wide_csv import (
     classify_headers,
-    metadata_from_wide,
     observations_from_wide,
     read_header,
 )
@@ -87,18 +85,8 @@ def run_merge_stream(
     obs_stream = stream_wide_csv(spark, watch_dir, spec, header_file)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        target = read_obs_table(spark, obs_table_path, spec)
-        from station_data_ingestion_spark.plans.runner import _align_union_columns
-
-        batch_df, target = _align_union_columns(batch_df, target)
-        # single-pass: the stats observation rides the write job
-        merged, finish = merge_observed(
-            target, batch_df, spec.key_fields, replace=spec.replace_duplicates
-        )
-        _overwrite_slice(merged, obs_table_path, spec)
-        finish()
+        if batch_df.take(1):
+            _merge_into_table(spark, batch_df, spec, obs_table_path)
 
     writer = (
         obs_stream.writeStream.outputMode("append")

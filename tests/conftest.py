@@ -3,6 +3,14 @@ import pytest
 from station_data_ingestion_spark.session import get_spark
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "ingest: the ingestion tier (wide-CSV parse, run_job, remote staging, "
+        "streaming ingest, sinks); run with `pytest -m ingest`",
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)

@@ -4,6 +4,8 @@ from pyspark.sql import functions as F
 from station_data_ingestion_spark.plans.jobspec import DataItemSpec
 from station_data_ingestion_spark.sources import wide_csv
 
+pytestmark = pytest.mark.ingest
+
 
 def make_spec(**kw):
     base = dict(
@@ -106,15 +108,12 @@ def test_fast_and_declarative_paths_agree(spark, wide_csv_day):
 
 def test_fast_path_used_for_local_file(spark, wide_csv_day):
     spec = make_spec()
-    obs = wide_csv.observations_from_wide_fast(
-        spark,
-        wide_csv_day,
-        wide_csv.read_header(spark, wide_csv_day),
-        ["X2022.03.02"],
-        spec,
-    )
+    units, layouts = wide_csv.plan_wide_units(spark, [wide_csv_day], spec)
+    obs = wide_csv.read_wide_units(spark, units, layouts, spec)
     assert obs is not None
     assert "MapInPandas" in obs._jdf.queryExecution().executedPlan().toString()
+    default, _ = wide_csv.ingest_wide_csv(spark, wide_csv_day, spec)
+    assert "MapInPandas" in default._jdf.queryExecution().executedPlan().toString()
 
 
 def test_positional_id_col_when_skn_absent(spark, tmp_path):
@@ -136,8 +135,8 @@ def test_positional_id_col_when_skn_absent(spark, tmp_path):
 
 
 def test_batch_multi_file_ingest_matches_per_file(spark, tmp_path):
-    """observations_from_wide_many_fast: many files, different header
-    layouts, one plan == union of per-file ingests."""
+    """Planner + unit reader: many files, different header layouts, one
+    plan == union of per-file ingests."""
     spec = make_spec(start_date="2022-01-01", end_date="2022-12-31")
     p1 = tmp_path / "jan.csv"
     p1.write_text("SKN,X2022.01.01,X2022.01.02\n1,1.0,NA\n2,2.0,2.5\n")
@@ -146,11 +145,13 @@ def test_batch_multi_file_ingest_matches_per_file(spark, tmp_path):
     p3 = tmp_path / "old.csv"  # all dates out of range -> contributes nothing
     p3.write_text("SKN,X2021.01.01\n1,9.9\n")
     paths = [str(p1), str(p2), str(p3)]
-    batch = wide_csv.observations_from_wide_many_fast(spark, paths, spec)
+    units, layouts = wide_csv.plan_wide_units(spark, paths, spec)
+    assert sorted({u[0] for u in units}) == sorted(paths[:2])  # old.csv: no units
+    batch = wide_csv.read_wide_units(spark, units, layouts, spec)
     assert batch is not None
     per_file = None
     for p in paths:
-        obs, _ = wide_csv.ingest_wide_csv(spark, p, spec)
+        obs, _ = wide_csv.ingest_wide_csv(spark, p, spec, fast=False)
         per_file = obs if per_file is None else per_file.unionAll(obs)
     assert batch.exceptAll(per_file).count() == 0
     assert per_file.exceptAll(batch).count() == 0
@@ -201,9 +202,7 @@ def test_batch_ingest_raises_on_unusable_file(spark, tmp_path):
     bad.write_text("")  # empty/corrupt file: no header at all
     spec = make_spec()
     with pytest.raises(ValueError, match="missing the SKN station-id"):
-        wide_csv.observations_from_wide_many_fast(
-            spark, [str(good), str(bad)], spec
-        )
+        wide_csv.plan_wide_units(spark, [str(good), str(bad)], spec)
 
 
 def test_whitespace_padded_numeric_both_paths(spark, tmp_path):
@@ -251,3 +250,49 @@ def test_data_col_start_positional_contract(spark):
     cols = ["SKN", "X2022.03.01", "X2022.03.02", "X2022.03.03"]
     _meta, dates = wide_csv.classify_headers(cols, spec)
     assert dates == ["X2022.03.02", "X2022.03.03"]  # index 1 excluded
+
+
+def test_units_capped_by_max_partition_bytes(spark, tmp_path, monkeypatch):
+    """A file larger than spark.sql.files.maxPartitionBytes plans to
+    several units, each parsed in small whole-line chunks, and the rows
+    equal the declarative ingest."""
+    spec = make_spec()
+    p = tmp_path / "big.csv"
+    rows = [f"s{i:04d},St{i},{i}.5,NA\n" for i in range(300)]
+    p.write_text("SKN,Station.Name,X2022.03.02,X2022.03.03\n" + "".join(rows))
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        units, layouts = wide_csv.plan_wide_units(spark, [str(p)], spec)
+        monkeypatch.setattr(wide_csv, "_READ_CHUNK_BYTES", 100)
+        obs = wide_csv.read_wide_units(spark, units, layouts, spec)
+        ref, _ = wide_csv.ingest_wide_csv(spark, str(p), spec, fast=False)
+        assert len(units) > 1
+        assert all(e - s <= 1024 + max(map(len, rows)) for _p, s, e in units)
+        assert obs.count() == 300
+        assert obs.exceptAll(ref).count() == 0 and ref.exceptAll(obs).count() == 0
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_repeated_unread_or_blank_header_names_ignored(spark, tmp_path):
+    """Only columns that are read (SKN, metadata, in-range dates) must be
+    unique; repeated out-of-range or unknown columns and blank names are
+    dropped on both paths, like any unknown column."""
+    spec = make_spec()
+    p = tmp_path / "dups.csv"
+    p.write_text(
+        "SKN,Station.Name,Junk,Junk,X2021.01.01,X2021.01.01,X2022.03.02,,\n"
+        "1,Kula,a,b,9,9,1.5,,\n"
+        "2,Hilo,c,d,9,9,2.5,,\n"
+    )
+    for fast in (True, False):
+        obs, meta = wide_csv.ingest_wide_csv(spark, str(p), spec, fast=fast)
+        assert sorted((r.station_id, r.value) for r in obs.collect()) == [
+            ("1", 1.5), ("2", 2.5)
+        ]
+        assert sorted(r["name"] for r in meta.collect()) == ["Hilo", "Kula"]
+    p.write_text("SKN,Station.Name,Station.Name,X2022.03.02\n1,Kula,Kula,1.5\n")
+    with pytest.raises(ValueError, match=r"repeats column\(s\) \['Station.Name'\]"):
+        wide_csv.plan_wide_units(spark, [str(p)], spec)

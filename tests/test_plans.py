@@ -174,3 +174,19 @@ def test_ingestion_unpivot_no_shuffle(spark, tmp_path):
     )
     obs, _ = ingest_wide_csv(spark, str(p), spec)
     assert "Exchange" not in plan(obs)
+
+    # a wide file (>50 in-range date columns) fans out over byte ranges,
+    # not over a repartition of its rows
+    days = [f"X2022.{m:02d}.{d:02d}" for m in (1, 2) for d in range(1, 29)]
+    wide = tmp_path / "wide.csv"
+    wide.write_text(
+        "SKN," + ",".join(days) + "\n"
+        + "".join(f"{i}," + ",".join(["1.5"] * len(days)) + "\n" for i in range(40))
+    )
+    spec = DataItemSpec(
+        files=[], datatype="t", period="day", fill="raw",
+        start_date="2022-01-01", end_date="2022-02-28",
+    )
+    obs, _ = ingest_wide_csv(spark, str(wide), spec)
+    assert "Exchange" not in plan(obs)
+    assert obs.count() == 40 * len(days)

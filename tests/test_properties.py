@@ -5,6 +5,7 @@ pipeline; Spark session reuse keeps example counts practical (examples
 are capped -- each example runs distributed jobs).
 """
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -12,6 +13,8 @@ from pyspark.sql import functions as F
 from station_data_ingestion_spark.operators.merge import merge_observations
 from station_data_ingestion_spark.plans.jobspec import DataItemSpec
 from station_data_ingestion_spark.sources.wide_csv import ingest_wide_csv
+
+pytestmark = pytest.mark.ingest
 
 _SETTINGS = dict(
     max_examples=5,

@@ -7,6 +7,8 @@ import pytest
 
 from station_data_ingestion_spark.sources.remote import is_remote, stage_if_remote
 
+pytestmark = pytest.mark.ingest
+
 CSV = "SKN,X2022.03.01\n1.0,2.5\n"
 
 
@@ -86,14 +88,42 @@ def test_runner_ingests_remote_file(spark, http_root, tmp_path):
     assert len(rows) == 1 and rows[0]["station_id"] == "1.0"
 
 
+def test_sequential_commits_files_before_a_failed_download(
+    spark, http_root, tmp_path, monkeypatch
+):
+    """Sequential mode stages each file just before its own commit: a 404
+    on the second URL leaves the first file committed and recorded."""
+    import urllib.error
+
+    from station_data_ingestion_spark.plans.jobspec import JobSpec
+    from station_data_ingestion_spark.plans.runner import Manifest, run_job
+    from station_data_ingestion_spark.plans.snapshot_store import read_table
+
+    monkeypatch.setattr(
+        "station_data_ingestion_spark.operators.sinks.time.sleep", lambda s: None
+    )
+    good, bad = f"{http_root}/w.csv", f"{http_root}/missing.csv"
+    job = JobSpec.from_dict({"data": [{
+        "files": [good, bad], "datatype": "t", "period": "day", "fill": "raw",
+        "start_date": "2022-03-01", "end_date": "2022-03-01",
+    }]})
+    obs_path, manifest = str(tmp_path / "obs"), str(tmp_path / "m.json")
+    with pytest.raises(urllib.error.HTTPError):
+        run_job(spark, job, obs_path, manifest, staging_dir=str(tmp_path / "stage"))
+    assert Manifest(manifest).is_complete(good)
+    assert not Manifest(manifest).is_complete(bad)
+    assert [r["station_id"] for r in read_table(spark, obs_path).collect()] == ["1.0"]
+
+
 def test_distributed_remote_ingest(spark, tmp_path):
-    """Executors fetch+parse each URL; result == local ingestion of the
-    same files."""
+    """Remote files stage to local work units and ingest in one batch
+    group; result == local ingestion of the same files."""
     import http.server
     import threading
 
-    from station_data_ingestion_spark.plans.jobspec import DataItemSpec
-    from station_data_ingestion_spark.sources.remote import ingest_remote_wide_csvs
+    from station_data_ingestion_spark.plans.jobspec import DataItemSpec, JobSpec
+    from station_data_ingestion_spark.plans.runner import run_job
+    from station_data_ingestion_spark.plans.snapshot_store import read_table
     from station_data_ingestion_spark.sources.wide_csv import ingest_wide_csv
 
     (tmp_path / "jan.csv").write_text("SKN,X2022.01.01,X2022.01.02\n1,1.0,NA\n2,2.0,2.5\n")
@@ -106,17 +136,22 @@ def test_distributed_remote_ingest(spark, tmp_path):
     try:
         root = f"http://127.0.0.1:{srv.server_address[1]}"
         spec = DataItemSpec(
-            files=[], datatype="t", period="day", fill="raw",
+            files=[f"{root}/jan.csv", f"{root}/feb.csv"], datatype="t",
+            period="day", fill="raw",
             start_date="2022-01-01", end_date="2022-12-31",
         )
-        got = ingest_remote_wide_csvs(
-            spark, [f"{root}/jan.csv", f"{root}/feb.csv"], spec
+        table = str(tmp_path / "obs")
+        stats = run_job(
+            spark, JobSpec(data=[spec]), table, None,
+            staging_dir=str(tmp_path / "stage"), batch_files=True,
         )
-        assert got is not None
+        assert set(stats) == set(spec.files)
         local = None
         for name in ("jan.csv", "feb.csv"):
             obs, _ = ingest_wide_csv(spark, str(tmp_path / name), spec)
             local = obs if local is None else local.unionAll(obs)
+        got = read_table(spark, table).select(*local.columns)
+        assert got is not None
         assert got.exceptAll(local).count() == 0
         assert local.exceptAll(got).count() == 0
         assert got.count() == 4

@@ -1,8 +1,12 @@
 from datetime import date
 
+import pytest
+
 from station_data_ingestion_spark.plans.jobspec import DataItemSpec, JobSpec
 from station_data_ingestion_spark.plans.runner import Manifest, run_job, template_dates
 from station_data_ingestion_spark.plans.snapshot_store import read_table
+
+pytestmark = pytest.mark.ingest
 
 
 def test_template_dates():
@@ -299,3 +303,123 @@ def test_concurrent_merges_same_slice_never_lose_updates(spark, tmp_path):
 
     got = {(r.station_id, r.value) for r in read_table(spark, table).collect()}
     assert got == {("1", 1.0), ("2", 2.0), ("3", 3.0)}, got
+
+
+_MODES = {
+    "sequential": {},
+    "batch_files": {"batch_files": True},
+    "ranged": {"resume_ranges_bytes": 150, "ranges_per_commit": 2},
+}
+
+
+@pytest.mark.parametrize("mode", list(_MODES))
+def test_repeated_header_name_raises(spark, tmp_path, mode):
+    """A repeated header name is one clear driver-side error in every mode
+    (not silently dropped columns, not a worker KeyError)."""
+    p = tmp_path / "dup.csv"
+    p.write_text(
+        "SKN,X2022.03.01,X2022.03.01,X2022.03.02\n"
+        + "".join(f"s{i:03d},1.0,2.0,3.0\n" for i in range(20))
+    )
+    with pytest.raises(ValueError, match=r"repeats column\(s\) \['X2022.03.01'\]"):
+        run_job(
+            spark, _ranged_job(str(p)), str(tmp_path / "obs"),
+            str(tmp_path / "m.json"), **_MODES[mode],
+        )
+
+
+@pytest.fixture(scope="module")
+def crash_inputs(spark, tmp_path_factory):
+    """Two key-disjoint 40-station files and the table an uninterrupted
+    run builds from them."""
+    d = tmp_path_factory.mktemp("crash_inputs")
+    files = []
+    for prefix in ("a", "b"):
+        header = "SKN,Station.Name," + ",".join(f"X2022.03.{x:02d}" for x in range(1, 6))
+        rows = [
+            f"{prefix}{i:03d},St{i}," + ",".join(f"{i}.{x}" for x in range(1, 6))
+            for i in range(40)
+        ]
+        p = d / f"{prefix}.csv"
+        p.write_text(header + "\n" + "\n".join(rows) + "\n")
+        files.append(str(p))
+    job = JobSpec(data=[DataItemSpec(
+        files=files, datatype="temperature", period="day", fill="raw",
+        start_date="2022-03-01", end_date="2022-03-05",
+    )])
+    run_job(spark, job, str(d / "baseline"))
+    return job, _key_rows(spark, str(d / "baseline"))
+
+
+def _key_rows(spark, table):
+    cols = ["station_id", "date", "datatype", "period", "fill", "value"]
+    return sorted(map(tuple, read_table(spark, table).select(*cols).collect()))
+
+
+@pytest.mark.parametrize("point", ["before_publish", "before_record", "mid_group"])
+@pytest.mark.parametrize("mode", list(_MODES))
+def test_crash_point_rerun_equals_uninterrupted(
+    spark, tmp_path, monkeypatch, crash_inputs, mode, point
+):
+    """Crash at a layer boundary of the run_job loop, re-run: the per-key
+    table contents equal an uninterrupted run (exactly-once)."""
+    import station_data_ingestion_spark.plans.runner as runner_mod
+    from pyspark.sql import functions as F
+
+    from station_data_ingestion_spark.plans.snapshot_store import SnapshotTable
+
+    job, want = crash_inputs
+    assert len(want) == 2 * 40 * 5
+    table = str(tmp_path / "obs")
+    manifest = str(tmp_path / "m.json")
+    fired = []
+
+    def once(real):
+        def crash(*a, **kw):
+            if not fired:
+                fired.append(True)
+                raise RuntimeError("simulated crash")
+            return real(*a, **kw)
+        return crash
+
+    if point == "before_publish":  # staged files written, version not published
+        monkeypatch.setattr(
+            SnapshotTable, "_write_manifest_exclusive",
+            once(SnapshotTable._write_manifest_exclusive),
+        )
+    elif point == "before_record":  # version published, manifest not written
+        monkeypatch.setattr(Manifest, "_save", once(Manifest._save))
+    else:  # a task of the second file's later group fails mid-job
+        real_read = runner_mod.read_wide_units
+
+        def crashing_read(*a, **kw):
+            obs = real_read(*a, **kw)
+            return obs.withColumn("value", F.when(
+                F.col("station_id") == "b030",
+                F.raise_error(F.lit("simulated crash")).cast("double"),
+            ).otherwise(F.col("value")))
+
+        monkeypatch.setattr(runner_mod, "read_wide_units", crashing_read)
+    with pytest.raises(Exception, match="simulated crash"):
+        run_job(spark, job, table, manifest, **_MODES[mode])
+    monkeypatch.undo()
+    assert not Manifest(manifest).all_complete(job.data[0].files)
+
+    run_job(spark, job, table, manifest, **_MODES[mode])
+    assert Manifest(manifest).all_complete(job.data[0].files)
+    assert _key_rows(spark, table) == want
+
+
+@pytest.mark.parametrize("mode", list(_MODES))
+def test_group_without_units_is_recorded_not_published(spark, tmp_path, mode):
+    """A file whose dates are all out of range merges and publishes
+    nothing, but its manifest record is still written."""
+    from station_data_ingestion_spark.plans.snapshot_store import SnapshotTable
+
+    p = tmp_path / "old.csv"
+    p.write_text("SKN,X2021.01.01\n" + "".join(f"s{i:03d},1.0\n" for i in range(20)))
+    table, manifest = str(tmp_path / "obs"), str(tmp_path / "m.json")
+    stats = run_job(spark, _ranged_job(str(p)), table, manifest, **_MODES[mode])
+    assert stats[str(p)].created == 0 and stats[str(p)].replaced == 0
+    assert Manifest(manifest).is_complete(str(p))
+    assert SnapshotTable(spark, table, ("datatype", "period")).latest_version() is None

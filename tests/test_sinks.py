@@ -4,6 +4,8 @@ import pytest
 
 from station_data_ingestion_spark.operators import sinks
 
+pytestmark = pytest.mark.ingest
+
 
 def test_backoff_schedule_shape():
     delays = list(sinks.backoff_delays(5, seed=7))

@@ -13,6 +13,8 @@ from station_data_ingestion_spark.plans.jobspec import DataItemSpec
 from station_data_ingestion_spark.streaming import windows as W
 from station_data_ingestion_spark.streaming.ingest import run_merge_stream
 
+pytestmark = pytest.mark.ingest
+
 HEADER = "SKN,Station.Name,X2022.03.01,X2022.03.02,X2022.03.03\n"
 
 
@@ -57,6 +59,34 @@ def test_stream_ingest_merge_and_late_correction(spark, tmp_path):
     # restart with same checkpoint: no reprocessing, table unchanged
     run_merge_stream(spark, str(watch), spec, str(f1), table, ckpt)
     assert read_table(spark, table).count() == 3
+
+
+def test_stream_conflicting_batch_fails_with_key_error(spark, tmp_path):
+    """A micro-batch with conflicting rows for one key fails the query
+    with the runner merge's RecordKeyError; the table stays at its
+    previous snapshot version."""
+    from station_data_ingestion_spark.plans.snapshot_store import SnapshotTable
+
+    watch = tmp_path / "incoming"
+    watch.mkdir()
+    table = str(tmp_path / "obs")
+    ckpt = str(tmp_path / "ckpt")
+    f1 = watch / "march_a.csv"
+    f1.write_text(HEADER + "1,Kula,10.0,NA,12.0\n")
+    spec = make_spec()
+    run_merge_stream(spark, str(watch), spec, str(f1), table, ckpt)
+    t = SnapshotTable(spark, table)
+    assert t.latest_version() == 1
+
+    # one trigger, two files, two different values for ("1", 2022-03-02)
+    (watch / "march_b.csv").write_text(HEADER + "1,Kula,10.0,20.0,12.0\n")
+    (watch / "march_c.csv").write_text(HEADER + "1,Kula,10.0,21.0,12.0\n")
+    with pytest.raises(Exception, match="RecordKeyError"):
+        run_merge_stream(spark, str(watch), spec, str(f1), table, ckpt)
+    assert t.latest_version() == 1
+    from station_data_ingestion_spark.plans.snapshot_store import read_table
+    vals = {(r.station_id, r.date): r.value for r in read_table(spark, table).collect()}
+    assert vals == {("1", "2022-03-01"): 10.0, ("1", "2022-03-03"): 12.0}
 
 
 @pytest.fixture()
