@@ -16,9 +16,12 @@ single full-outer join on the composite key. Semantics preserved exactly:
   inserted; unmatched still created [ingestion_handler.py:197,200-201]
 - stats {created, replaced} [ingestion_handler.py:251-254]
 
-Scale notes (100 TB): both sides shuffle ONCE on the composite key; the
-multi-match probe rides the same shuffle as a count-window instead of a
-second aggregation. AQE handles skewed station keys. With a date-partitioned
+Scale notes (100 TB): the multi-match probe is a count-window, not a
+second aggregation. It does not always share the join's shuffle: when a
+caller's key columns are constants on the update side (``run_job``'s
+datatype/period/fill), they fold out of the join keys, and the target is
+shuffled once by all keys for the window and again by the rest for the
+join. AQE handles skewed station keys. With a date-partitioned
 target table, callers should pre-filter the target to the update's date
 range so partition pruning bounds the target scan (dynamic file pruning /
 Delta MERGE would do this automatically; plain-parquet callers pass the
@@ -96,7 +99,11 @@ def merge_plan(
             f"{sorted(updates.columns)}"
         )
 
-    # Count duplicate keys in the target on the same shuffle the join uses.
+    # Count duplicate keys in the target. The window shares the join's
+    # shuffle only when no key folds to a constant on the update side; on
+    # run_job's shape (datatype/period/fill literal) the target shuffles
+    # twice. Repartitioning by the non-constant keys first saves that
+    # shuffle and a job warm but was slower cold (ROADMAP, measured).
     w = Window.partitionBy(*key_fields)
     t = target.select(
         *key_fields,

@@ -19,9 +19,12 @@ from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict
 from datetime import date, timedelta
+from functools import reduce
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -303,72 +306,97 @@ def run_job(
     cannot open (globs, hdfs:// URIs) take the declarative parse.
 
     ``metadata_transport``: optional zero-arg factory returning a sink
-    transport (see operators.sinks). When given, each file's station
-    metadata is written through it as sparse JSON docs (nodata fields
-    dropped [reference: src/driver.py:144-152]) before its first commit.
+    transport (see operators.sinks). When given, the station metadata of
+    each group's files (one union for a batch; a ranged file's only on
+    its first contact) is written through it as sparse JSON docs (nodata
+    fields dropped [reference: src/driver.py:144-152]) on a background
+    thread, side by side with the group's parse, merge and publish, and
+    joined before the file's manifest record. The observation publish does
+    not wait for the docs: if the metadata write fails, the merge may be
+    published but the file is not recorded, so a re-run replays the
+    (idempotent) merge and rewrites the docs. A failure on either side is
+    raised (the merge's, if both fail), and only once no metadata write is
+    running.
     """
     manifest = Manifest(manifest_path) if manifest_path else None
     group_size = ranges_per_commit or spark.sparkContext.defaultParallelism
     results: dict[str, MergeStats] = {}
-    for item in job.data:
-        pending = [f for f in item.files if not (manifest and manifest.is_complete(f))]
-        staged = {f: stage_if_remote(f, staging_dir) for f in pending} if batch_files else {}
-        batch = bool(staged) and all(os.path.isfile(p) for p in staged.values())
-        for files in [pending] if batch else [[f] for f in pending]:
-            paths = [staged.get(f) or stage_if_remote(f, staging_dir) for f in files]
-            split, done = None, set()
-            if (
-                resume_ranges_bytes and manifest and not batch
-                and os.path.isfile(paths[0])
-                and os.path.getsize(paths[0]) > resume_ranges_bytes
-            ):
-                prior = manifest.range_state(files[0])
-                split, done = prior["split_bytes"] or resume_ranges_bytes, prior["ranges"]
-            if os.path.isfile(paths[0]):
-                units, layouts = plan_wide_units(spark, paths, item, split)
-                units = [u for u in units if f"{u[1]}-{u[2]}" not in done]
-                size = group_size if split else max(1, len(units))
-                groups = [units[i : i + size] for i in range(0, len(units), size)]
-                metas = (
-                    metadata_from_wide(
-                        scan_wide_csv(spark, p, layouts[p].columns),
-                        classify_headers(layouts[p].columns, item)[0],
-                        job.location,
+    # Station metadata is written on this one background thread while the
+    # calling thread merges. The thread runs only the docs query, whose CSV
+    # scan is resolved on the calling thread: it must never call
+    # read_obs_table or SnapshotTable._read_entry_files, which flip
+    # partitionColumnTypeInference session-wide.
+    docs_pool = ThreadPoolExecutor(max_workers=1, thread_name_prefix="station-docs")
+    try:
+        for item in job.data:
+            pending = [f for f in item.files if not (manifest and manifest.is_complete(f))]
+            staged = {f: stage_if_remote(f, staging_dir) for f in pending} if batch_files else {}
+            batch = bool(staged) and all(os.path.isfile(p) for p in staged.values())
+            for files in [pending] if batch else [[f] for f in pending]:
+                paths = [staged.get(f) or stage_if_remote(f, staging_dir) for f in files]
+                split, done = None, set()
+                if (
+                    resume_ranges_bytes and manifest and not batch
+                    and os.path.isfile(paths[0])
+                    and os.path.getsize(paths[0]) > resume_ranges_bytes
+                ):
+                    prior = manifest.range_state(files[0])
+                    split, done = prior["split_bytes"] or resume_ranges_bytes, prior["ranges"]
+                if os.path.isfile(paths[0]):
+                    units, layouts = plan_wide_units(spark, paths, item, split)
+                    units = [u for u in units if f"{u[1]}-{u[2]}" not in done]
+                    size = group_size if split else max(1, len(units))
+                    groups = [units[i : i + size] for i in range(0, len(units), size)]
+                    metas = (
+                        metadata_from_wide(
+                            scan_wide_csv(spark, p, layouts[p].columns),
+                            classify_headers(layouts[p].columns, item)[0],
+                            job.location,
+                        )
+                        for p in paths
                     )
-                    for p in paths
-                )
-            else:  # glob / hdfs:// path: the declarative parse, one group
-                obs, meta = ingest_wide_csv(spark, paths[0], item, job.location)
-                groups, metas = [None], [meta]
-            for meta in (metas if metadata_transport is not None and not done else ()):
-                write_docs(
-                    sparse_json_docs(meta, nodata=item.nodata),
-                    metadata_transport,
-                    retries=job.retries,
-                    max_parallelism=job.concurrency,
-                )
-            total = MergeStats(created=0, replaced=0)
-            for i, group in enumerate(groups):
-                if group is not None:
-                    obs = read_wide_units(spark, group, layouts, item)
-                stats = _merge_into_table(spark, obs, item, obs_table_path)
-                total = MergeStats(
-                    created=total.created + stats.created,
-                    replaced=total.replaced + stats.replaced,
-                )
-                if split:
-                    manifest.mark_ranges_complete(
-                        files[0], [f"{s}-{e}" for _p, s, e in group], stats, split,
-                        complete=i == len(groups) - 1,
+                else:  # glob / hdfs:// path: the declarative parse, one group
+                    obs, meta = ingest_wide_csv(spark, paths[0], item, job.location)
+                    groups, metas = [None], [meta]
+                docs = None
+                if metadata_transport is not None and not done:
+                    meta = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), metas)
+                    docs = docs_pool.submit(
+                        inheritable_thread_target(spark)(write_docs),
+                        sparse_json_docs(meta, nodata=item.nodata),
+                        metadata_transport,
+                        retries=job.retries,
+                        max_parallelism=job.concurrency,
                     )
-            # a group with no units merges nothing but is still recorded
-            if split and not groups:
-                manifest.mark_ranges_complete(files[0], [], total, split, complete=True)
-            elif manifest and batch:
-                manifest.mark_batch_complete(files, total)
-            elif manifest and not split:
-                manifest.mark_complete(files[0], total)
-            results.update({f: total for f in files})
+                total = MergeStats(created=0, replaced=0)
+                for i, group in enumerate(groups):
+                    if group is not None:
+                        obs = read_wide_units(spark, group, layouts, item)
+                    stats = _merge_into_table(spark, obs, item, obs_table_path)
+                    total = MergeStats(
+                        created=total.created + stats.created,
+                        replaced=total.replaced + stats.replaced,
+                    )
+                    if split:
+                        if docs:
+                            docs.result()
+                        manifest.mark_ranges_complete(
+                            files[0], [f"{s}-{e}" for _p, s, e in group], stats, split,
+                            complete=i == len(groups) - 1,
+                        )
+                if docs:
+                    docs.result()
+                # a group with no units merges nothing but is still recorded
+                if split and not groups:
+                    manifest.mark_ranges_complete(files[0], [], total, split, complete=True)
+                elif manifest and batch:
+                    manifest.mark_batch_complete(files, total)
+                elif manifest and not split:
+                    manifest.mark_complete(files[0], total)
+                results.update({f: total for f in files})
+    finally:
+        # on error: drop a queued write, wait out a running one
+        docs_pool.shutdown(wait=True, cancel_futures=True)
     return results
 
 

@@ -140,9 +140,23 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
+# Each query is built once for all the audits below: building is most of
+# an audit's cost (explain is a small part), and every audit reads the
+# same returned plan and schema.
+_BUILT: dict[str, tuple] = {}
+
+
+def _built(spark, name: str) -> tuple:
+    """(formatted physical plan, output schema) of one registered query."""
+    if name not in _BUILT:
+        df = QUERIES[name].fn(spark, SF)
+        _BUILT[name] = (_plan(df), df.schema)
+    return _BUILT[name]
+
+
 @pytest.mark.parametrize("name", ALL_QUERIES)
 def test_no_cartesian_or_nested_loop(spark, name):
-    p = _plan(QUERIES[name].fn(spark, SF))
+    p = _built(spark, name)[0]
     assert "CartesianProduct" not in p, name
     if name not in CROSS_JOIN_OK:
         assert "BroadcastNestedLoopJoin" not in p, name
@@ -162,7 +176,7 @@ def test_fact_scans_prune_columns(spark, name):
     """Headline fact queries must never read all lineitem columns.
     (Explicit name list: a prefix filter also matched lineitem-free
     queries, which made their cases vacuous.)"""
-    p = _plan(QUERIES[name].fn(spark, SF))
+    p = _built(spark, name)[0]
     reads = [ln for ln in p.splitlines() if "ReadSchema" in ln and "lineitem" in ln]
     for ln in reads:
         # l_linenumber is never used by any registered query: seeing it
@@ -242,7 +256,7 @@ def test_no_complex_output_types(spark, name):
     array_join / element picks / to_json instead."""
     from pyspark.sql import types as T
 
-    schema = QUERIES[name].fn(spark, SF).schema
+    schema = _built(spark, name)[1]
     bad = [
         f.name
         for f in schema.fields
@@ -271,5 +285,5 @@ def test_no_unpartitioned_window(spark, name):
     partition -- the silent scale-killer WindowExec only warns about."""
     if name in GLOBAL_WINDOW_OK:
         pytest.skip("documented global-order semantic")
-    p = _plan(QUERIES[name].fn(spark, SF))
+    p = _built(spark, name)[0]
     assert not _GLOBAL_WIN.search(p), name

@@ -423,3 +423,186 @@ def test_group_without_units_is_recorded_not_published(spark, tmp_path, mode):
     assert stats[str(p)].created == 0 and stats[str(p)].replaced == 0
     assert Manifest(manifest).is_complete(str(p))
     assert SnapshotTable(spark, table, ("datatype", "period")).latest_version() is None
+
+
+def _docs_by_key(out):
+    from station_data_ingestion_spark.operators.sinks import read_jsonl_docs
+
+    return {d["skn"]: d for d in read_jsonl_docs(out)}
+
+
+@pytest.fixture(scope="module")
+def crash_docs(spark, tmp_path_factory, crash_inputs):
+    """Station docs of an uninterrupted run over the crash inputs."""
+    from station_data_ingestion_spark.operators.sinks import jsonl_dir_transport
+
+    d = tmp_path_factory.mktemp("crash_docs")
+    out = str(d / "docs")
+    run_job(spark, crash_inputs[0], str(d / "obs"),
+            metadata_transport=lambda: jsonl_dir_transport(out))
+    return _docs_by_key(out)
+
+
+@pytest.mark.parametrize("mode", list(_MODES))
+def test_metadata_sink_failure_raises_unrecorded_then_rerun_writes_docs(
+    spark, tmp_path, crash_inputs, crash_docs, mode
+):
+    """The metadata write runs beside the merge: its failure is raised
+    once no Spark job is left running, the file gets no manifest record,
+    and a re-run writes every station doc and the same table."""
+    from dataclasses import replace
+
+    from station_data_ingestion_spark.operators.sinks import jsonl_dir_transport
+
+    def failing_transport():  # local, so it pickles by value
+        def post(chunk):
+            raise OSError("metadata sink down")
+
+        return post
+
+    job, want = crash_inputs
+    job = replace(job, retries=0)
+    files = job.data[0].files
+    table, manifest = str(tmp_path / "obs"), str(tmp_path / "m.json")
+    with pytest.raises(Exception, match="metadata sink down"):
+        run_job(spark, job, table, manifest, metadata_transport=failing_transport,
+                **_MODES[mode])
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert files[0] not in Manifest(manifest).state
+
+    out = str(tmp_path / "docs")
+    run_job(spark, job, table, manifest,
+            metadata_transport=lambda: jsonl_dir_transport(out), **_MODES[mode])
+    assert Manifest(manifest).all_complete(files)
+    assert _docs_by_key(out) == crash_docs and len(crash_docs) == 80
+    assert _key_rows(spark, table) == want
+
+
+@pytest.mark.parametrize("mode", list(_MODES))
+def test_merge_failure_waits_for_metadata_write(spark, tmp_path, mode):
+    """A RecordKeyError from the merge is raised only after the slower
+    metadata write beside it has finished."""
+    from station_data_ingestion_spark.operators.merge import RecordKeyError
+    from station_data_ingestion_spark.operators.sinks import (
+        jsonl_dir_transport,
+        read_jsonl_docs,
+    )
+
+    p = tmp_path / "conflict.csv"
+    rows = ["s000,A,1.0,1.0", "s000,A,2.0,1.0"]  # same key, different value
+    rows += [f"s{i:03d},St{i},1.0,2.0" for i in range(1, 20)]
+    p.write_text("SKN,Station.Name,X2022.03.01,X2022.03.02\n" + "\n".join(rows) + "\n")
+    out = str(tmp_path / "docs")
+
+    def slow_transport():
+        import time
+
+        post = jsonl_dir_transport(out)
+
+        def slow(chunk):
+            time.sleep(5)
+            post(chunk)
+
+        return slow
+
+    with pytest.raises(RecordKeyError):
+        run_job(spark, _ranged_job(str(p)), str(tmp_path / "obs"),
+                str(tmp_path / "m.json"), metadata_transport=slow_transport,
+                **_MODES[mode])
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert len(read_jsonl_docs(out)) == len(rows)
+
+
+def test_cron_run_job_jobs_are_attributed_and_pinned(spark, tmp_path):
+    """A cron-shaped run_job (2-day window over a one-file 50-station table,
+    some values revised, station metadata on) runs every Spark job in the
+    caller's job group, the metadata write included, and runs 5 of them:
+    1 docs job + 4 merge jobs. In a cold JVM each extra serial query costs
+    seconds, so a new job here must be a deliberate change."""
+    from station_data_ingestion_spark.operators.sinks import jsonl_dir_transport
+
+    def wide(name, days, revised):
+        header = "SKN,Station.Name,Island," + ",".join(f"X2022.03.{d:02d}" for d in days)
+        rows = [
+            f"{i:04d},St{i},NA," + ",".join(
+                str(i + d + (0.5 if revised and i % 10 == 0 else 0)) for d in days
+            )
+            for i in range(50)
+        ]
+        path = tmp_path / name
+        path.write_text(header + "\n" + "\n".join(rows) + "\n")
+        return str(path)
+
+    def cron_job(path, start, end):
+        return JobSpec(data=[DataItemSpec(
+            files=[path], datatype="rainfall", period="day", fill="raw",
+            start_date=start, end_date=end,
+        )])
+
+    table = str(tmp_path / "obs")
+    run_job(spark, cron_job(wide("seed.csv", range(1, 11), False),
+                            "2022-03-01", "2022-03-10"), table)
+    cron = cron_job(wide("cron.csv", range(1, 13), True), "2022-03-10", "2022-03-11")
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()  # the status tracker fills from it, async
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    group = f"cron-guard-{tmp_path.name}"
+    sc.setJobGroup(group, "cron-shaped run_job")
+    try:
+        stats = run_job(
+            spark, cron, table, str(tmp_path / "m.json"),
+            metadata_transport=lambda: jsonl_dir_transport(str(tmp_path / "docs")),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+    assert (stats[cron.data[0].files[0]].created, stats[cron.data[0].files[0]].replaced) == (50, 5)
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) - before == set()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
+
+
+def test_batch_writes_one_metadata_docs_job(spark, tmp_path, monkeypatch):
+    """batch_files writes the station metadata of all its files in one
+    docs job (a union, null-extended across differing metadata columns),
+    and the docs equal the per-file run's."""
+    import json
+
+    import station_data_ingestion_spark.plans.runner as runner_mod
+    from station_data_ingestion_spark.operators.sinks import (
+        jsonl_dir_transport,
+        read_jsonl_docs,
+    )
+
+    headers = ["SKN,Station.Name,Island", "SKN,LAT,LON", "SKN,Station.Name,ELEV.m."]
+    files = []
+    for month, header in enumerate(headers, start=1):
+        p = tmp_path / f"m{month}.csv"
+        p.write_text(
+            f"{header},X2022.{month:02d}.01\n"
+            + "".join(f"s{i:02d},v{i},NA,{i}.5\n" for i in range(10))
+        )
+        files.append(str(p))
+    job = JobSpec(data=[DataItemSpec(
+        files=files, datatype="t", period="day", fill="raw",
+        start_date="2022-01-01", end_date="2022-12-31",
+    )])
+    calls = []
+    real = runner_mod.write_docs
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(runner_mod, "write_docs", counting)
+    docs = {}
+    for name, batch in (("seq", False), ("bat", True)):
+        out = str(tmp_path / f"docs_{name}")
+        calls.clear()
+        run_job(spark, job, str(tmp_path / name), str(tmp_path / f"{name}.json"),
+                metadata_transport=lambda out=out: jsonl_dir_transport(out),
+                batch_files=batch)
+        docs[name] = (len(calls), sorted(json.dumps(d, sort_keys=True) for d in read_jsonl_docs(out)))
+    assert docs["seq"][0] == 3 and docs["bat"][0] == 1
+    assert docs["bat"][1] == docs["seq"][1] and len(docs["bat"][1]) == 30

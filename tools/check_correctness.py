@@ -19,11 +19,12 @@ from __future__ import annotations
 
 import argparse
 import math
+import os
 import sys
 import time
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 

@@ -18,10 +18,11 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import HEADLINE  # noqa: E402
 from station_data_ingestion_spark.queries import QUERIES  # noqa: E402

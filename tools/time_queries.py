@@ -14,10 +14,11 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from station_data_ingestion_spark.queries import QUERIES  # noqa: E402
 from station_data_ingestion_spark.session import get_spark  # noqa: E402
