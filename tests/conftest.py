@@ -9,6 +9,12 @@ def pytest_configure(config):
         "ingest: the ingestion tier (wide-CSV parse, run_job, remote staging, "
         "streaming ingest, sinks); run with `pytest -m ingest`",
     )
+    config.addinivalue_line(
+        "markers",
+        "mirror: the 407-query plain-session mirror (tests/test_driver_session.py), "
+        "a ~15 min tier of its own; run with `pytest -m mirror`, the rest with "
+        "`pytest -m \"not mirror\"`",
+    )
 
 
 @pytest.fixture(scope="session")

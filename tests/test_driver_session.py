@@ -12,6 +12,10 @@ import os
 import subprocess
 import sys
 
+import pytest
+
+pytestmark = pytest.mark.mirror
+
 
 def test_all_queries_match_oracle_on_plain_session():
     out = subprocess.run(
