@@ -5,9 +5,8 @@ A naive ``df.write.parquet`` emits one file per task — at 100 TB with
 wide shuffles that is either thousands of KB-sized files (metadata
 pressure on every future scan, the #1 lakehouse operations complaint)
 or a handful of multi-GB files (no scan parallelism). The maintenance
-side of this already exists (`operators/maintenance.py:compact_slice`,
-`SnapshotTable.recluster_partition`); this operator prevents the
-problem instead of repairing it:
+side of this already exists (`SnapshotTable.recluster_partition`); this
+operator prevents the problem instead of repairing it:
 
 1. estimate bytes/row from a bounded sample serialized through Arrow
    (actual encoded size, not schema guesswork — strings dominate and
@@ -23,7 +22,7 @@ expected file size, which is the operationally useful direction
 (files slightly smaller than target, never wildly bigger).
 
 [reference: none — the reference writes through a document-store API;
-engine surface, same family as operators/maintenance.py]
+engine surface, same family as SnapshotTable.recluster_partition]
 """
 
 from __future__ import annotations

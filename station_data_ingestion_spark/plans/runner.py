@@ -4,8 +4,10 @@ Re-expresses the reference's operational loop [reference:
 src/driver.py:101-170, utils/task.sh:8-15, README.md:41-43]:
 
 - per data_item, per commit group of work units: observations + metadata
-- observations MERGE into the target parquet table (partitioned by
-  datatype/period so date-range queries prune partitions)
+- observations MERGE into the observation snapshot table
+  (plans.snapshot_store, partitioned by datatype/period so a merge reads
+  and rewrites only its slice); an old plain parquet table converts once
+  with :func:`convert_plain_table`
 - per-file commit manifest for resume: a file that completed is skipped on
   re-run; merge-key idempotency makes partial replays safe (the batch
   analog of the reference's byte-position state file)
@@ -137,24 +139,59 @@ class Manifest:
         return all(self.is_complete(f) for f in files)
 
 
-def _table_has_parquet(spark: SparkSession, table_path: str) -> bool:
-    """True iff the path holds a plain-layout table (any FS): >=1 parquet
-    file under a ``datatype=`` partition dir. Files a snapshot commit
-    promoted into ``data/`` before a crash cut its first publish do not
-    count -- the re-run must bootstrap the snapshot table, not read them."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(table_path)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+def _plain_slice_dirs(spark: SparkSession, table_path: str) -> list[str]:
+    """The top-level ``datatype=`` directories of a plain-layout table
+    (any FS, through the Hadoop FS API). Files a snapshot commit promoted
+    into ``data/`` before a crash cut its publish are not among them."""
+    from station_data_ingestion_spark.plans.snapshot_store import _fs
+
+    fs, path, _ = _fs(spark, table_path)
     if not fs.exists(path):
-        return False
-    for st in fs.listStatus(path):
-        if not st.getPath().getName().startswith(f"{OBS_PARTITION_COLS[0]}="):
-            continue
-        it = fs.listFiles(st.getPath(), True)
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                return True
-    return False
+        return []
+    return [
+        st.getPath().toString()
+        for st in fs.listStatus(path)
+        if st.isDirectory()
+        and st.getPath().getName().startswith(f"{OBS_PARTITION_COLS[0]}=")
+    ]
+
+
+def convert_plain_table(spark: SparkSession, table_path: str) -> int:
+    """Convert a plain hive-partitioned parquet table (``datatype=X/
+    period=Y/*.parquet``, the layout older versions merged into) in place
+    into a snapshot table, the one-shot analog of Delta's CONVERT TO
+    DELTA. Returns the table's snapshot version.
+
+    Only the top-level ``datatype=`` directories are read, with string
+    partition columns, and published as v1 in one commit; then they are
+    deleted. A conversion cut after its publish is finished by a re-run,
+    which only deletes the leftover directories; one cut before its
+    publish redoes the commit and never reads the files it promoted
+    under ``data/`` (vacuum reaps those).
+    """
+    from pyspark.sql import types as T
+
+    from station_data_ingestion_spark.plans.snapshot_store import SnapshotTable, _fs
+
+    snap = SnapshotTable(spark, table_path, OBS_PARTITION_COLS)
+    dirs = _plain_slice_dirs(spark, table_path)
+    if not snap.exists():
+        if not dirs:
+            raise FileNotFoundError(f"no plain parquet table at {table_path}")
+        inferred = (
+            spark.read.option("basePath", table_path)
+            .option("mergeSchema", "true").parquet(*dirs).schema
+        )
+        schema = T.StructType(
+            [f for f in inferred.fields if f.name not in OBS_PARTITION_COLS]
+            + [T.StructField(c, T.StringType()) for c in OBS_PARTITION_COLS]
+        )
+        plain = spark.read.option("basePath", table_path).schema(schema).parquet(*dirs)
+        snap.commit_overwrite_partitions(plain, expected_version=0, op="convert")
+    for d in dirs:
+        fs, path, _ = _fs(spark, d)
+        fs.delete(path, True)
+    return snap.latest_version()
 
 
 def read_obs_table(spark: SparkSession, table_path: str, spec: DataItemSpec) -> DataFrame:
@@ -162,42 +199,21 @@ def read_obs_table(spark: SparkSession, table_path: str, spec: DataItemSpec) -> 
 
     Partition pruning on (datatype, period) bounds the target scan -- the
     scale-critical move: a 100 TB observation table is never fully read to
-    merge one month of one datatype. Snapshot-layout tables (the default
-    sink, see plans.snapshot_store) prune driver-side from the manifest;
-    plain-layout tables prune via directory partition discovery.
+    merge one month of one datatype. The snapshot manifest prunes files
+    driver-side; a table with no snapshot (or no files in the slice) reads
+    as an empty frame of the observation columns.
     """
     from station_data_ingestion_spark.plans.snapshot_store import SnapshotTable
 
-    snap = SnapshotTable(spark, table_path, OBS_PARTITION_COLS)
-    if snap.exists():
-        df = snap.read(
-            partition={"datatype": spec.datatype, "period": spec.period}
-        )
-        if df is not None:
-            return df
-    # A previous zero-row run leaves a dir with no parquet footers, so an
-    # existence check alone isn't enough. The Hadoop FileSystem API (not
-    # os.path) keeps an hdfs:// or s3a:// target from reading as empty,
-    # which would let the dynamic partition overwrite wipe the real slice.
-    if snap.exists() or not _table_has_parquet(spark, table_path):
-        schema = "station_id string, date string, value double, " + ", ".join(
-            f"{k} string" for k in spec.static_properties
-        )
-        return spark.createDataFrame([], schema)
-    # Partition-column type inference would read a numeric-looking
-    # partition value (datatype='850') back as int; the merge would then
-    # compare/rewrite it as a number and create a duplicate slice
-    # ('datatype=850.0') the overwrite never replaces. Keys are strings.
-    conf_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    prev = spark.conf.get(conf_key, "true")
-    spark.conf.set(conf_key, "false")
-    try:
-        df = spark.read.parquet(table_path)
-    finally:
-        spark.conf.set(conf_key, prev)
-    return df.filter(
-        (F.col("datatype") == spec.datatype) & (F.col("period") == spec.period)
+    df = SnapshotTable(spark, table_path, OBS_PARTITION_COLS).read(
+        partition={"datatype": spec.datatype, "period": spec.period}
     )
+    if df is not None:
+        return df
+    schema = "station_id string, date string, value double, " + ", ".join(
+        f"{k} string" for k in spec.static_properties
+    )
+    return spark.createDataFrame([], schema)
 
 
 def _merge_into_table(
@@ -209,10 +225,12 @@ def _merge_into_table(
     """Read the pruned target, align schemas, merge, overwrite the slice.
 
     The single merge sequence of ``run_job`` and the streaming ingest;
-    key-integrity failures surface as RecordKeyError.
+    key-integrity failures surface as RecordKeyError. The target is a
+    snapshot table (created on the first merge); a plain parquet table
+    raises ValueError untouched until :func:`convert_plain_table` ran.
 
-    Concurrency: MERGE is read-merge-write, so snapshot targets publish
-    with compare-and-swap (``expected_version`` = the version the merge
+    Concurrency: MERGE is read-merge-write, so the slice publishes with
+    compare-and-swap (``expected_version`` = the version the merge
     read); a CAS loss re-reads the NEW snapshot and redoes the whole
     merge -- serializable isolation, never a lost update. Retries are
     bounded: pathological contention fails loudly rather than spins.
@@ -226,14 +244,25 @@ def _merge_into_table(
     last_conflict: Exception | None = None
     for _attempt in range(_MAX_MERGE_REDO_ATTEMPTS):
         snap = SnapshotTable(spark, obs_table_path, OBS_PARTITION_COLS)
-        expected = snap.latest_version() or 0
+        expected = snap.latest_version()
+        if expected is None and _plain_slice_dirs(spark, obs_table_path):
+            raise ValueError(
+                f"{obs_table_path} is a plain parquet table; convert it once "
+                "with plans.runner.convert_plain_table(spark, path)"
+            )
+        expected = expected or 0
         target = read_obs_table(spark, obs_table_path, item)
         obs, target = _align_union_columns(obs_in, target)
         merged, finish = merge_observed(
             target, obs, item.key_fields, replace=item.replace_duplicates
         )
         try:
-            _overwrite_slice(merged, obs_table_path, expected_version=expected)
+            # NOT clustered: repartitionByRange samples its child plan,
+            # which would evaluate the merge plan (and its created/replaced
+            # stat aggregation) twice. Zone-map stats still record;
+            # SnapshotTable.recluster_partition re-clusters a slice offline
+            # when date pruning matters.
+            snap.commit_overwrite_partitions(merged, expected_version=expected)
         except ConcurrentCommitError as e:
             last_conflict = e
             continue
@@ -322,10 +351,7 @@ def run_job(
     group_size = ranges_per_commit or spark.sparkContext.defaultParallelism
     results: dict[str, MergeStats] = {}
     # Station metadata is written on this one background thread while the
-    # calling thread merges. The thread runs only the docs query, whose CSV
-    # scan is resolved on the calling thread: it must never call
-    # read_obs_table or SnapshotTable._read_entry_files, which flip
-    # partitionColumnTypeInference session-wide.
+    # calling thread merges.
     docs_pool = ThreadPoolExecutor(max_workers=1, thread_name_prefix="station-docs")
     try:
         for item in job.data:
@@ -398,46 +424,3 @@ def run_job(
         # on error: drop a queued write, wait out a running one
         docs_pool.shutdown(wait=True, cancel_futures=True)
     return results
-
-
-def _overwrite_slice(
-    merged: DataFrame,
-    table_path: str,
-    expected_version: int | None = None,
-) -> None:
-    """Overwrite only the merged (datatype, period) partition slice.
-
-    Layout auto-detects from what's on disk:
-
-    - a new table, or an existing snapshot table: transactional
-      versioned-snapshot commit (plans.snapshot_store) -- new files +
-      atomic manifest publish, so readers always see a complete version
-      and a crash mid-commit leaves the previous one intact (also on
-      object stores). Read it back with
-      :func:`station_data_ingestion_spark.read_table`.
-    - an existing plain parquet table keeps its layout: Spark dynamic
-      partition overwrite. One local/HDFS writer only: the merged plan
-      reads the same path it rewrites, and a reader listing the
-      directory mid-swap can see a torn state.
-    """
-    from station_data_ingestion_spark.plans.snapshot_store import SnapshotTable
-
-    spark = merged.sparkSession
-    snap = SnapshotTable(spark, table_path, OBS_PARTITION_COLS)
-    if snap.exists() or not _table_has_parquet(spark, table_path):
-        # NOT clustered: repartitionByRange samples its child plan, which
-        # would evaluate the merge plan (and its created/replaced stat
-        # aggregation) twice. Zone-map stats still record; a maintenance
-        # pass can re-cluster slices offline when date pruning matters.
-        snap.commit_overwrite_partitions(merged, expected_version=expected_version)
-        return
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.write.mode("overwrite")
-            .partitionBy(*OBS_PARTITION_COLS)
-            .parquet(table_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)

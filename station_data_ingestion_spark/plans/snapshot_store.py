@@ -1,10 +1,12 @@
 """Versioned-snapshot parquet table: transactional partition overwrite.
 
-The plain dynamic-partition-overwrite merge target (`_overwrite_slice`)
-rewrites partition directories in place -- safe for one local/HDFS writer,
-unsafe for concurrent readers (they can list a half-swapped directory) and
-for object stores without atomic rename of directories. This module gives
-the merge target Delta-style semantics with nothing but parquet + JSON:
+This is the one layout of the observation merge target. Rewriting
+partition directories in place (Spark's dynamic partition overwrite) is
+safe for one local/HDFS writer only: concurrent readers can list a
+half-swapped directory, and object stores have no atomic directory
+rename. This module gives the merge target Delta-style semantics with
+nothing but parquet + JSON (an old plain ``datatype=/period=`` table
+converts once with ``plans.runner.convert_plain_table``):
 
 - data files are immutable and live in ONE hive-partitioned tree
   ``<table>/data/datatype=X/period=Y/<commit>-part-*.parquet``; a commit
@@ -39,8 +41,6 @@ import uuid
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
-
-from station_data_ingestion_spark.operators.maintenance import _unescape_pv
 
 _SNAPDIR = "_snapshots"
 _REFS = "_refs"
@@ -464,6 +464,22 @@ def _json_safe_stat(v, lo: bool):
         f = float(v)
         return _math.nextafter(f, -_math.inf if lo else _math.inf)
     return None
+
+
+def _unescape_pv(name: str) -> str:
+    """Decode a Hive-escaped partition directory value (``%3A`` -> ``:``)."""
+    out, i = [], 0
+    while i < len(name):
+        if name[i] == "%" and len(name) - i >= 3:
+            try:
+                out.append(chr(int(name[i + 1 : i + 3], 16)))
+                i += 3
+                continue
+            except ValueError:
+                pass
+        out.append(name[i])
+        i += 1
+    return "".join(out)
 
 
 def _partition_of(rel_path: str, partition_cols: tuple[str, ...]) -> dict:
@@ -1462,6 +1478,9 @@ class SnapshotTable:
         column either way; columns added by schema evolution null-fill
         (the same semantics mergeSchema gives within one group).
         """
+        from pyspark.sql import functions as F
+        from pyspark.sql import types as T
+
         groups: dict[tuple, list[str]] = {}
         for e in entries:
             base = e.get("base") or f"{self.path}/data"
@@ -1476,53 +1495,56 @@ class SnapshotTable:
             # share a scan at all; the narrow group casts after read.
             fill = json.dumps(e.get("fill") or {}, sort_keys=True)
             widen = json.dumps(e.get("widen") or {}, sort_keys=True)
-            spec = (tuple(sorted(e["partition"].keys())), base, fill, widen)
+            # partition columns in the order the hive path lists them
+            keys = [seg.split("=", 1)[0] for seg in e["path"].split("/")[:-1]]
+            pcols = tuple(k for k in keys if k in e["partition"])
+            spec = (pcols, base, fill, widen)
             groups.setdefault(spec, []).append(f"{base}/{e['path']}")
-        # numeric-looking partition values (datatype='850') must read back
-        # as strings, or a merge would rewrite them as a new '850.0' slice
-        conf_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        prev = self.spark.conf.get(conf_key, "true")
-        self.spark.conf.set(conf_key, "false")
-        try:
-            from pyspark.sql import functions as F
-
-            dfs = []
-            for (_, base, fill, widen), paths in sorted(groups.items()):
-                reader = self.spark.read.option("basePath", base)
-                # cached-footer explicit schema: zero footer opens on a
-                # warm read; partition columns are still discovered from
-                # the hive paths and appended (string-typed, inference
-                # off); missing data columns null-fill like mergeSchema
-                merged = _merged_footer_schema(self.spark, paths)
-                if merged is not None:
-                    d = reader.schema(merged).parquet(*paths)
+        dfs = []
+        for (pcols, base, fill, widen), paths in sorted(groups.items()):
+            # An explicit read schema: the data columns (cached footers:
+            # zero footer opens on a warm read; else the files' mergeSchema
+            # read without basePath, which discovers no partition column)
+            # plus every partition column as a string. Spark types a
+            # partition column from a user schema that names it, so a
+            # numeric-looking value ('850', '007') never reads back as a
+            # number, with no session conf touched. Missing data columns
+            # null-fill like mergeSchema.
+            data = _merged_footer_schema(self.spark, paths)
+            if data is None:
+                data = (
+                    self.spark.read.option("mergeSchema", "true")
+                    .parquet(*paths).schema
+                )
+            schema = T.StructType(
+                [f for f in data.fields if f.name not in pcols]
+                + [T.StructField(c, T.StringType()) for c in pcols]
+            )
+            d = (
+                self.spark.read.option("basePath", base)
+                .schema(schema).parquet(*paths)
+            )
+            for col, spec_ in json.loads(fill).items():
+                filled = F.lit(spec_["v"]).cast(spec_["t"])
+                if col in d.columns:
+                    # defensive: a fill-tagged file should lack the
+                    # column entirely; coalesce keeps physical values
+                    d = d.withColumn(col, F.coalesce(F.col(col), filled))
                 else:
-                    d = reader.option("mergeSchema", "true").parquet(*paths)
-                for col, spec_ in json.loads(fill).items():
-                    filled = F.lit(spec_["v"]).cast(spec_["t"])
-                    if col in d.columns:
-                        # defensive: a fill-tagged file should lack the
-                        # column entirely; coalesce keeps physical values
-                        d = d.withColumn(
-                            col, F.coalesce(F.col(col), filled)
-                        )
-                    else:
-                        d = d.withColumn(col, filled)
-                # widen casts run AFTER fills so a widened ADDED column
-                # (fill-created, never physical in this group) still
-                # lands at the wide type
-                for col, to_type in json.loads(widen).items():
-                    if col in d.columns:
-                        d = d.withColumn(col, F.col(col).cast(to_type))
-                if lineage:
-                    d = d.select(
-                        "*",
-                        F.col("_metadata.file_path").alias("_dv_file"),
-                        F.col("_metadata.row_index").alias("_dv_row"),
-                    )
-                dfs.append(d)
-        finally:
-            self.spark.conf.set(conf_key, prev)
+                    d = d.withColumn(col, filled)
+            # widen casts run AFTER fills so a widened ADDED column
+            # (fill-created, never physical in this group) still lands
+            # at the wide type
+            for col, to_type in json.loads(widen).items():
+                if col in d.columns:
+                    d = d.withColumn(col, F.col(col).cast(to_type))
+            if lineage:
+                d = d.select(
+                    "*",
+                    F.col("_metadata.file_path").alias("_dv_file"),
+                    F.col("_metadata.row_index").alias("_dv_row"),
+                )
+            dfs.append(d)
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d, allowMissingColumns=True)
@@ -4457,11 +4479,6 @@ class SnapshotTable:
         return deleted
 
 
-def is_snapshot_table(spark: SparkSession, path: str) -> bool:
-    """True iff the path has at least one published snapshot manifest."""
-    return SnapshotTable(spark, path).exists()
-
-
 def read_table(
     spark: SparkSession,
     path: str,
@@ -4469,22 +4486,27 @@ def read_table(
     ranges: dict[str, tuple] | None = None,
     version: int | None = None,
 ) -> DataFrame:
-    """Read a merge target regardless of layout (snapshot or plain).
+    """Read a snapshot table (the merge target's one layout).
 
-    ``partition``/``ranges`` prune snapshot manifests driver-side and
+    ``partition``/``ranges`` prune the manifest driver-side and
     ``version`` time-travels to an older snapshot (see
-    :meth:`SnapshotTable.read`); on plain layouts they are ignored --
-    callers must always apply their real predicate either way.
+    :meth:`SnapshotTable.read`); callers still apply their real
+    predicate. A path with no published snapshot raises
+    ``FileNotFoundError``; an old plain parquet table converts once with
+    ``plans.runner.convert_plain_table``.
     """
     t = SnapshotTable(spark, path)
-    if t.exists():
-        df = t.read(partition=partition, ranges=ranges, version=version)
-        if df is None and (partition or ranges):
-            # pruned to nothing: a valid empty result, not a missing table
-            full = t.read(version=version)
-            if full is not None:
-                return full.limit(0)
-        if df is None:
-            raise FileNotFoundError(f"snapshot table {path} has no live files")
-        return df
-    return spark.read.parquet(path)
+    if not t.exists():
+        raise FileNotFoundError(
+            f"{path} has no snapshot manifest; a plain parquet table "
+            "converts with plans.runner.convert_plain_table"
+        )
+    df = t.read(partition=partition, ranges=ranges, version=version)
+    if df is None and (partition or ranges):
+        # pruned to nothing: a valid empty result, not a missing table
+        full = t.read(version=version)
+        if full is not None:
+            return full.limit(0)
+    if df is None:
+        raise FileNotFoundError(f"snapshot table {path} has no live files")
+    return df

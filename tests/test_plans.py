@@ -137,11 +137,13 @@ def test_merge_single_shuffle_per_side(spark):
 
 
 def test_obs_table_read_prunes_partitions(spark, tmp_path):
-    """read_obs_table's (datatype, period) filter must become a partition
-    filter on the scan -- at 100 TB this is what bounds a merge to its
-    slice instead of scanning the whole observation table."""
+    """read_obs_table's (datatype, period) slice must prune the scan to
+    that slice's files -- at 100 TB this is what bounds a merge to its
+    slice instead of scanning the whole observation table. The snapshot
+    manifest prunes driver-side: the scan lists only the slice's files."""
     from station_data_ingestion_spark.plans.jobspec import DataItemSpec
     from station_data_ingestion_spark.plans.runner import read_obs_table
+    from station_data_ingestion_spark.plans.snapshot_store import SnapshotTable
 
     df = spark.createDataFrame(
         [("1", "2022-03-01", 1.0, "temp", "day", "raw"),
@@ -150,14 +152,20 @@ def test_obs_table_read_prunes_partitions(spark, tmp_path):
         "datatype string, period string, fill string",
     )
     path = str(tmp_path / "obs")
-    df.write.partitionBy("datatype", "period").parquet(path)
+    t = SnapshotTable(spark, path)
+    t.commit_overwrite_partitions(df)
     spec = DataItemSpec(
         files=[], datatype="temp", period="day", fill="raw",
         start_date="2022-03-01", end_date="2022-03-01",
     )
-    p = plan(read_obs_table(spark, path, spec))
-    pf = [ln for ln in p.splitlines() if "PartitionFilters" in ln]
-    assert pf and "datatype" in pf[0] and "period" in pf[0], p
+    want = {
+        e["path"] for e in t._read_manifest(t.latest_version())["files"]
+        if e["partition"] == {"datatype": "temp", "period": "day"}
+    }
+    got = read_obs_table(spark, path, spec)
+    files = {f.split("/obs/data/", 1)[1] for f in got.inputFiles()}
+    assert want and files == want
+    assert [r.station_id for r in got.collect()] == ["1"]
 
 
 def test_ingestion_unpivot_no_shuffle(spark, tmp_path):

@@ -192,10 +192,10 @@ def test_mid_file_resume_reingests_only_unfinished_ranges(
     from station_data_ingestion_spark.plans.snapshot_store import read_table
 
     csv = _big_wide_csv(tmp_path)
-    plain_table = str(tmp_path / "plain_run")
-    run_job(spark, _ranged_job(csv), plain_table)  # uninterrupted baseline
+    baseline_table = str(tmp_path / "baseline_run")
+    run_job(spark, _ranged_job(csv), baseline_table)  # uninterrupted baseline
     want = sorted(
-        map(tuple, read_table(spark, plain_table).select(
+        map(tuple, read_table(spark, baseline_table).select(
             "station_id", "date", "value").collect())
     )
     assert len(want) == 40 * 5
@@ -513,13 +513,9 @@ def test_merge_failure_waits_for_metadata_write(spark, tmp_path, mode):
     assert len(read_jsonl_docs(out)) == len(rows)
 
 
-def test_cron_run_job_jobs_are_attributed_and_pinned(spark, tmp_path):
-    """A cron-shaped run_job (2-day window over a one-file 50-station table,
-    some values revised, station metadata on) runs every Spark job in the
-    caller's job group, the metadata write included, and runs 5 of them:
-    1 docs job + 4 merge jobs. In a cold JVM each extra serial query costs
-    seconds, so a new job here must be a deliberate change."""
-    from station_data_ingestion_spark.operators.sinks import jsonl_dir_transport
+def _seeded_cron(spark, tmp_path, table):
+    """Seed ``table`` with 10 days of a 50-station file; return the cron
+    job of a 2-day window over the next file, some of its values revised."""
 
     def wide(name, days, revised):
         header = "SKN,Station.Name,Island," + ",".join(f"X2022.03.{d:02d}" for d in days)
@@ -539,10 +535,21 @@ def test_cron_run_job_jobs_are_attributed_and_pinned(spark, tmp_path):
             start_date=start, end_date=end,
         )])
 
-    table = str(tmp_path / "obs")
     run_job(spark, cron_job(wide("seed.csv", range(1, 11), False),
                             "2022-03-01", "2022-03-10"), table)
-    cron = cron_job(wide("cron.csv", range(1, 13), True), "2022-03-10", "2022-03-11")
+    return cron_job(wide("cron.csv", range(1, 13), True), "2022-03-10", "2022-03-11")
+
+
+def test_cron_run_job_jobs_are_attributed_and_pinned(spark, tmp_path):
+    """A cron-shaped run_job (2-day window over a one-file 50-station table,
+    some values revised, station metadata on) runs every Spark job in the
+    caller's job group, the metadata write included, and runs 5 of them:
+    1 docs job + 4 merge jobs. In a cold JVM each extra serial query costs
+    seconds, so a new job here must be a deliberate change."""
+    from station_data_ingestion_spark.operators.sinks import jsonl_dir_transport
+
+    table = str(tmp_path / "obs")
+    cron = _seeded_cron(spark, tmp_path, table)
     sc = spark.sparkContext
     bus = sc._jsc.sc().listenerBus()  # the status tracker fills from it, async
     bus.waitUntilEmpty()
@@ -606,3 +613,162 @@ def test_batch_writes_one_metadata_docs_job(spark, tmp_path, monkeypatch):
         docs[name] = (len(calls), sorted(json.dumps(d, sort_keys=True) for d in read_jsonl_docs(out)))
     assert docs["seq"][0] == 3 and docs["bat"][0] == 1
     assert docs["bat"][1] == docs["seq"][1] and len(docs["bat"][1]) == 30
+
+
+def test_product_path_sets_no_session_conf(spark, tmp_path, monkeypatch):
+    """A cron-shaped run_job (station metadata on) and a read_table set no
+    session conf. A flip of session-wide conf around a read races every
+    other thread of the session: the metadata writer, a streaming
+    foreachBatch merge, the caller's own reads."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from station_data_ingestion_spark.operators.sinks import jsonl_dir_transport
+
+    table = str(tmp_path / "obs")
+    cron = _seeded_cron(spark, tmp_path, table)
+    calls = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, *a, **kw):
+        calls.append(a)
+        return real_set(self, *a, **kw)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    stats = run_job(
+        spark, cron, table, str(tmp_path / "m.json"),
+        metadata_transport=lambda: jsonl_dir_transport(str(tmp_path / "docs")),
+    )
+    assert read_table(spark, table).count() == 50 * 11
+    monkeypatch.undo()
+    assert (stats[cron.data[0].files[0]].created, stats[cron.data[0].files[0]].replaced) == (50, 5)
+    assert calls == []
+
+
+def test_two_merges_and_a_reader_share_one_session(spark, tmp_path):
+    """Two merges into two tables run on two threads of one session while
+    a third thread reads a third table, all with a numeric-looking
+    datatype ('850'): every schema read keeps it a string, both merged
+    tables are exact, and the session conf is as it was."""
+    import threading
+
+    from station_data_ingestion_spark.plans.runner import _merge_into_table
+
+    item = DataItemSpec(
+        files=[], datatype="850", period="day", fill="raw",
+        start_date="2022-03-01", end_date="2022-03-31",
+    )
+    schema = ("station_id string, date string, value double, "
+              "datatype string, period string, fill string")
+    conf_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    conf_before = spark.conf.get(conf_key)
+    reads = str(tmp_path / "read")
+    _merge_into_table(spark, spark.createDataFrame(
+        [("r", "2022-03-01", 1.0, "850", "day", "raw")], schema), item, reads)
+    rounds = 6
+    done, errors, dtypes = threading.Event(), [], []
+
+    def merge_rounds(table):
+        try:
+            for r in range(rounds):
+                rows = [(f"s{r}", "2022-03-01", float(r), "850", "day", "raw"),
+                        ("s0", "2022-03-02", float(r), "850", "day", "raw")]
+                _merge_into_table(spark, spark.createDataFrame(rows, schema), item, table)
+        except Exception as e:  # surfaced by the main thread
+            errors.append(e)
+
+    def read_loop():
+        try:
+            while not done.is_set() or len(dtypes) < 20:
+                d = dict(read_table(spark, reads).dtypes)
+                dtypes.append((d["datatype"], d["period"]))
+        except Exception as e:
+            errors.append(e)
+
+    tables = [str(tmp_path / "a"), str(tmp_path / "b")]
+    writers = [threading.Thread(target=merge_rounds, args=(t,)) for t in tables]
+    reader = threading.Thread(target=read_loop)
+    for t in [reader, *writers]:
+        t.start()
+    for t in writers:
+        t.join(timeout=300)
+    done.set()
+    reader.join(timeout=120)
+    assert not any(t.is_alive() for t in [reader, *writers])
+    assert errors == []
+    assert set(dtypes) == {("string", "string")}
+    want = sorted(
+        [(f"s{r}", "2022-03-01", "850", "day", "raw", float(r)) for r in range(rounds)]
+        + [("s0", "2022-03-02", "850", "day", "raw", float(rounds - 1))]
+    )
+    for t in tables:
+        df = read_table(spark, t)
+        assert dict(df.dtypes)["datatype"] == "string"
+        assert _key_rows(spark, t) == want
+    assert spark.conf.get(conf_key) == conf_before
+
+
+def _top_level_slices(table):
+    import os
+
+    return sorted(n for n in os.listdir(table) if n.startswith("datatype="))
+
+
+def test_convert_plain_table(spark, tmp_path, monkeypatch):
+    """A plain hive-partitioned table (a numeric-looking slice and a
+    hive-escaped one with a numeric-looking period) converts into a snapshot table with the same rows.
+    A conversion cut after its files were promoted but before its publish
+    is finished by a re-run; a second call is a no-op; run_job merges into
+    the converted table."""
+    import os
+
+    from station_data_ingestion_spark.plans.runner import convert_plain_table
+    from station_data_ingestion_spark.plans.snapshot_store import SnapshotTable
+
+    rows = [
+        (f"s{i:03d}", f"2022-03-0{d}", float(i + d) + off, dt, per, "raw")
+        for dt, per, off in (("850", "day", 0.0), ("temp:avg", "007", 100.0))
+        for i in range(10)
+        for d in (1, 2)
+    ]
+    table = str(tmp_path / "obs")
+    spark.createDataFrame(
+        rows, "station_id string, date string, value double, "
+        "datatype string, period string, fill string",
+    ).repartition(3).write.partitionBy("datatype", "period").parquet(table)
+    assert _top_level_slices(table) == ["datatype=850", "datatype=temp%3Aavg"]
+    want = sorted((s, d, dt, per, f, v) for s, d, v, dt, per, f in rows)
+
+    def crash(*a, **kw):
+        raise RuntimeError("simulated crash")
+
+    monkeypatch.setattr(SnapshotTable, "_write_manifest_exclusive", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        convert_plain_table(spark, table)
+    monkeypatch.undo()
+    assert os.listdir(os.path.join(table, "data"))  # promoted, not published
+    assert not SnapshotTable(spark, table).exists()
+
+    assert convert_plain_table(spark, table) == 1
+    assert _key_rows(spark, table) == want
+    df = read_table(spark, table)
+    assert dict(df.dtypes)["datatype"] == dict(df.dtypes)["period"] == "string"
+    assert _top_level_slices(table) == []
+    snaps = sorted(os.listdir(os.path.join(table, "_snapshots")))
+
+    assert convert_plain_table(spark, table) == 1  # no-op
+    assert sorted(os.listdir(os.path.join(table, "_snapshots"))) == snaps
+    assert _key_rows(spark, table) == want
+
+    csv = tmp_path / "cron.csv"
+    csv.write_text("SKN,X2022.03.01,X2022.03.02\ns000,9.0,2.0\ns099,5.0,6.0\n")
+    job = JobSpec(data=[DataItemSpec(
+        files=[str(csv)], datatype="850", period="day", fill="raw",
+        start_date="2022-03-01", end_date="2022-03-02",
+    )])
+    stats = run_job(spark, job, table)[str(csv)]
+    assert (stats.created, stats.replaced) == (2, 1)
+    merged = [r for r in want if not (r[0] == "s000" and r[1] == "2022-03-01" and r[2] == "850")]
+    merged += [("s000", "2022-03-01", "850", "day", "raw", 9.0),
+               ("s099", "2022-03-01", "850", "day", "raw", 5.0),
+               ("s099", "2022-03-02", "850", "day", "raw", 6.0)]
+    assert _key_rows(spark, table) == sorted(merged)

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from station_data_ingestion_spark.plans.snapshot_store import (
     SnapshotTable,
-    is_snapshot_table,
     read_table,
 )
 
@@ -126,21 +125,56 @@ def test_vacuum_keeps_latest_version_files(spark, tmp_path):
     assert [r.value for r in read_table(spark, str(tmp_path / "tbl")).collect()] == [2.0]
 
 
-def test_read_table_plain_fallback(spark, tmp_path):
-    p = str(tmp_path / "plain")
-    _df(spark, [("1", "2022-03-01", 1.0, "temperature", "day")]).write.parquet(p)
-    assert not is_snapshot_table(spark, p)
-    assert read_table(spark, p).count() == 1
+@pytest.mark.ingest
+def test_plain_table_is_refused_untouched(spark, tmp_path):
+    """A plain hive-partitioned parquet table (no snapshot manifest) is
+    not a merge target: run_job raises, naming convert_plain_table, before
+    it reads or writes the table, and read_table raises."""
+    from station_data_ingestion_spark.plans.jobspec import DataItemSpec, JobSpec
+    from station_data_ingestion_spark.plans.runner import run_job
+
+    plain = tmp_path / "plain"
+    _df(spark, [("1", "2022-03-01", 1.0, "temperature", "day")]).write.partitionBy(
+        "datatype", "period"
+    ).parquet(str(plain))
+
+    def files():
+        return {f: f.read_bytes() for f in plain.rglob("*") if f.is_file()}
+
+    before = files()
+    csv = tmp_path / "w.csv"
+    csv.write_text("SKN,X2022.03.01\n1,2.0\n")
+    job = JobSpec(data=[DataItemSpec(
+        files=[str(csv)], datatype="temperature", period="day", fill="raw",
+        start_date="2022-03-01", end_date="2022-03-01",
+    )])
+    with pytest.raises(ValueError, match="convert_plain_table"):
+        run_job(spark, job, str(plain))
+    assert files() == before
+    with pytest.raises(FileNotFoundError, match="convert_plain_table"):
+        read_table(spark, str(plain))
 
 
-def test_numeric_partition_values_stay_strings(spark, tmp_path):
+@pytest.mark.parametrize(
+    "footer_schema", ["1", "0"], ids=["footer_schema", "merge_schema"]
+)
+def test_numeric_partition_values_stay_strings(spark, tmp_path, monkeypatch, footer_schema):
+    """Numeric-looking partition values ('850', '007') read back as
+    strings, in path order after the data columns, from both read-schema
+    sources: the cached footer schema and the mergeSchema fallback."""
+    monkeypatch.setenv("SPARK_GRAFT_FOOTER_SCHEMA", footer_schema)
     t = SnapshotTable(spark, str(tmp_path / "tbl"))
     t.commit_overwrite_partitions(
-        _df(spark, [("1", "2022-03-01", 1.0, "850", "month")])
+        _df(spark, [("1", "2022-03-01", 1.0, "850", "007"),
+                    ("2", "2022-03-01", 2.0, "0851", "007")])
     )
     df = t.read()
-    assert dict(df.dtypes)["datatype"] == "string"
-    assert df.filter(F.col("datatype") == "850").count() == 1
+    assert df.dtypes == [
+        ("station_id", "string"), ("date", "string"), ("value", "double"),
+        ("datatype", "string"), ("period", "string"),
+    ]
+    assert df.filter((F.col("datatype") == "850") & (F.col("period") == "007")).count() == 1
+    assert {(r.datatype, r.period) for r in df.collect()} == {("850", "007"), ("0851", "007")}
 
 
 def test_escaped_partition_values_round_trip(spark, tmp_path):
