@@ -948,7 +948,6 @@ def bench_pipeline_governed(
 
     from station_data_ingestion_spark.plans.jobspec import DataItemSpec
     from station_data_ingestion_spark.plans.runner import (
-        OBS_PARTITION_COLS,
         _merge_into_table,
         read_obs_table,
     )
@@ -1003,7 +1002,8 @@ def bench_pipeline_governed(
                 assert stats.replaced == 0 and stats.created > min_created
 
             timings[f"{tag}merge_create"] = timed_median(create, n=1)
-            snap = SnapshotTable(spark, target, OBS_PARTITION_COLS)
+            # the spec the merge recorded (the hidden year included)
+            snap = SnapshotTable(spark, target)
             if governed:
                 # governance state, built OUTSIDE the timed stages:
                 # stable row ids + a pending CDC key-retirement batch

@@ -5,9 +5,13 @@ src/driver.py:101-170, utils/task.sh:8-15, README.md:41-43]:
 
 - per data_item, per commit group of work units: observations + metadata
 - observations MERGE into the observation snapshot table
-  (plans.snapshot_store, partitioned by datatype/period so a merge reads
-  and rewrites only its slice); an old plain parquet table converts once
-  with :func:`convert_plain_table`
+  (plans.snapshot_store), partitioned by datatype, period and a hidden
+  ``year`` derived from ``date``: a merge reads and rewrites only the
+  years of its data item's window in its (datatype, period) slice, and
+  refuses observations dated outside that window. The first merge into
+  a slice of the older (datatype, period) layout reads the whole slice
+  and rewrites it in the year layout in the same commit; an old plain
+  parquet table converts once with :func:`convert_plain_table`
 - per-file commit manifest for resume: a file that completed is skipped on
   re-run; merge-key idempotency makes partial replays safe (the batch
   analog of the reference's byte-position state file)
@@ -30,6 +34,7 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from station_data_ingestion_spark.functions.dates import to_iso
 from station_data_ingestion_spark.operators.merge import (
     _DUP_UPDATE_MSG,
     _MULTI_MATCH_MSG,
@@ -49,8 +54,15 @@ from station_data_ingestion_spark.sources.wide_csv import (
     scan_wide_csv,
 )
 
-OBS_PARTITION_COLS = ("datatype", "period")
+# The layout every merge writes: (datatype, period) slices, each split by
+# the hidden year of its observations' date ('YYYY-MM-DD' or 'YYYY-MM').
+# Readers open the table with the spec its manifest records.
+OBS_PARTITION_COLS = ("datatype", "period", "year")
+OBS_PARTITION_TRANSFORMS = {"year": ("year", "date")}
+# the layout of a plain parquet table, and of snapshot tables before the year
+_SLICE_COLS = ("datatype", "period")
 _MAX_MERGE_REDO_ATTEMPTS = 5
+_OUT_OF_WINDOW_MSG = "observation dated outside its data item's window"
 
 
 def template_dates(config_text: str, on: date | None = None) -> str:
@@ -152,7 +164,7 @@ def _plain_slice_dirs(spark: SparkSession, table_path: str) -> list[str]:
         st.getPath().toString()
         for st in fs.listStatus(path)
         if st.isDirectory()
-        and st.getPath().getName().startswith(f"{OBS_PARTITION_COLS[0]}=")
+        and st.getPath().getName().startswith(f"{_SLICE_COLS[0]}=")
     ]
 
 
@@ -163,17 +175,18 @@ def convert_plain_table(spark: SparkSession, table_path: str) -> int:
     DELTA. Returns the table's snapshot version.
 
     Only the top-level ``datatype=`` directories are read, with string
-    partition columns, and published as v1 in one commit; then they are
-    deleted. A conversion cut after its publish is finished by a re-run,
-    which only deletes the leftover directories; one cut before its
-    publish redoes the commit and never reads the files it promoted
-    under ``data/`` (vacuum reaps those).
+    partition columns, and published as v1 in one commit, written in
+    the year layout every merge writes; then they are deleted. A
+    conversion cut after its publish is finished by a re-run, which only
+    deletes the leftover directories; one cut before its publish redoes
+    the commit and never reads the files it promoted under ``data/``
+    (vacuum reaps those).
     """
     from pyspark.sql import types as T
 
-    from station_data_ingestion_spark.plans.snapshot_store import SnapshotTable, _fs
+    from station_data_ingestion_spark.plans.snapshot_store import _fs
 
-    snap = SnapshotTable(spark, table_path, OBS_PARTITION_COLS)
+    snap = _obs_table(spark, table_path)
     dirs = _plain_slice_dirs(spark, table_path)
     if not snap.exists():
         if not dirs:
@@ -183,8 +196,8 @@ def convert_plain_table(spark: SparkSession, table_path: str) -> int:
             .option("mergeSchema", "true").parquet(*dirs).schema
         )
         schema = T.StructType(
-            [f for f in inferred.fields if f.name not in OBS_PARTITION_COLS]
-            + [T.StructField(c, T.StringType()) for c in OBS_PARTITION_COLS]
+            [f for f in inferred.fields if f.name not in _SLICE_COLS]
+            + [T.StructField(c, T.StringType()) for c in _SLICE_COLS]
         )
         plain = spark.read.option("basePath", table_path).schema(schema).parquet(*dirs)
         snap.commit_overwrite_partitions(plain, expected_version=0, op="convert")
@@ -194,26 +207,81 @@ def convert_plain_table(spark: SparkSession, table_path: str) -> int:
     return snap.latest_version()
 
 
-def read_obs_table(spark: SparkSession, table_path: str, spec: DataItemSpec) -> DataFrame:
-    """Read the observation target, pruned to the spec's merge slice.
-
-    Partition pruning on (datatype, period) bounds the target scan -- the
-    scale-critical move: a 100 TB observation table is never fully read to
-    merge one month of one datatype. The snapshot manifest prunes files
-    driver-side; a table with no snapshot (or no files in the slice) reads
-    as an empty frame of the observation columns.
-    """
+def _obs_table(spark: SparkSession, table_path: str):
+    """A handle on the observation table that writes its layout (a merge
+    or a conversion); readers open the table with its recorded spec."""
     from station_data_ingestion_spark.plans.snapshot_store import SnapshotTable
 
-    df = SnapshotTable(spark, table_path, OBS_PARTITION_COLS).read(
-        partition={"datatype": spec.datatype, "period": spec.period}
+    return SnapshotTable(
+        spark, table_path, OBS_PARTITION_COLS,
+        partition_transforms=OBS_PARTITION_TRANSFORMS,
     )
-    if df is not None:
-        return df
+
+
+def _window(item: DataItemSpec) -> tuple[str, str]:
+    """The item's [start_date, end_date] as the ISO text of its dates."""
+    r = item.date_range
+    return to_iso(r.start, item.period), to_iso(r.end, item.period)
+
+
+def _merge_target(snap, version: int | None, item: DataItemSpec):
+    """The item's merge target at ``version`` and the partitions of the
+    older layout its commit must retire: (rows or None, [partition]).
+
+    Pruned by partition value only, to the years of the item's window in
+    its (datatype, period) slice. Zone maps are not applied: the commit
+    drops every file of a year it replaces, so a file skipped on its
+    date stats would be lost. A slice that still holds files of the
+    (datatype, period) layout is read whole (those files span every
+    year), and its commit retires them.
+    """
+    if not version:
+        return None, []
+    slice_ = {"datatype": item.datatype, "period": item.period}
+    manifest = snap._read_manifest(version)
+    if any(e["partition"] == slice_ for e in manifest["files"]):
+        return snap.read(partition=slice_, version=version, _manifest=manifest), [slice_]
+    lo, hi = _window(item)
+    years = [f"{y:04d}" for y in range(int(lo[:4]), int(hi[:4]) + 1)]
+    target = snap.read(partition={**slice_, "year": years}, version=version, _manifest=manifest)
+    return target, []
+
+
+def _empty_obs(spark: SparkSession, spec: DataItemSpec) -> DataFrame:
     schema = "station_id string, date string, value double, " + ", ".join(
         f"{k} string" for k in spec.static_properties
     )
     return spark.createDataFrame([], schema)
+
+
+def read_obs_table(spark: SparkSession, table_path: str, spec: DataItemSpec) -> DataFrame:
+    """Read the observation target of a merge of ``spec``: the years of
+    its window in its (datatype, period) slice (see :func:`_merge_target`).
+
+    Partition pruning bounds the target scan -- the scale-critical move:
+    a 100 TB observation table is never fully read to merge one day of
+    one datatype. The snapshot manifest prunes files driver-side; a
+    table with no snapshot (or no files in the slice) reads as an empty
+    frame of the observation columns.
+    """
+    from station_data_ingestion_spark.plans.snapshot_store import SnapshotTable
+
+    snap = SnapshotTable(spark, table_path)
+    df, _retire = _merge_target(snap, snap.latest_version(), spec)
+    return df if df is not None else _empty_obs(spark, spec)
+
+
+def _guard_window(obs: DataFrame, item: DataItemSpec) -> DataFrame:
+    """Fail the write that consumes ``obs`` on a row dated outside the
+    item's window (or undated): the merge reads only the window's years,
+    so such a row would replace a year it never read."""
+    lo, hi = _window(item)
+    d = F.col("date")
+    msg = f"{_OUT_OF_WINDOW_MSG} [{lo}, {hi}] ({item.datatype}/{item.period})"
+    return obs.filter(
+        F.when(d.isNull() | (d < lo) | (d > hi), F.raise_error(F.lit(msg)).cast("boolean"))
+        .otherwise(F.lit(True))
+    )
 
 
 def _merge_into_table(
@@ -222,36 +290,36 @@ def _merge_into_table(
     item: DataItemSpec,
     obs_table_path: str,
 ) -> MergeStats:
-    """Read the pruned target, align schemas, merge, overwrite the slice.
+    """Read the pruned target, align schemas, merge, overwrite its years.
 
     The single merge sequence of ``run_job`` and the streaming ingest;
-    key-integrity failures surface as RecordKeyError. The target is a
-    snapshot table (created on the first merge); a plain parquet table
-    raises ValueError untouched until :func:`convert_plain_table` ran.
+    key-integrity failures surface as RecordKeyError, an observation
+    dated outside the item's window as ValueError, both before anything
+    is published. The target is a snapshot table (created on the first
+    merge); a plain parquet table raises ValueError untouched until
+    :func:`convert_plain_table` ran.
 
-    Concurrency: MERGE is read-merge-write, so the slice publishes with
+    Concurrency: MERGE is read-merge-write, so the years publish with
     compare-and-swap (``expected_version`` = the version the merge
     read); a CAS loss re-reads the NEW snapshot and redoes the whole
     merge -- serializable isolation, never a lost update. Retries are
     bounded: pathological contention fails loudly rather than spins.
     """
-    from station_data_ingestion_spark.plans.snapshot_store import (
-        ConcurrentCommitError,
-        SnapshotTable,
-    )
+    from station_data_ingestion_spark.plans.snapshot_store import ConcurrentCommitError
 
-    obs_in = obs
+    obs_in = _guard_window(obs, item)
     last_conflict: Exception | None = None
     for _attempt in range(_MAX_MERGE_REDO_ATTEMPTS):
-        snap = SnapshotTable(spark, obs_table_path, OBS_PARTITION_COLS)
+        snap = _obs_table(spark, obs_table_path)
         expected = snap.latest_version()
         if expected is None and _plain_slice_dirs(spark, obs_table_path):
             raise ValueError(
                 f"{obs_table_path} is a plain parquet table; convert it once "
                 "with plans.runner.convert_plain_table(spark, path)"
             )
-        expected = expected or 0
-        target = read_obs_table(spark, obs_table_path, item)
+        target, retire = _merge_target(snap, expected, item)
+        if target is None:
+            target = _empty_obs(spark, item)
         obs, target = _align_union_columns(obs_in, target)
         merged, finish = merge_observed(
             target, obs, item.key_fields, replace=item.replace_duplicates
@@ -262,7 +330,9 @@ def _merge_into_table(
             # stat aggregation) twice. Zone-map stats still record;
             # SnapshotTable.recluster_partition re-clusters a slice offline
             # when date pruning matters.
-            snap.commit_overwrite_partitions(merged, expected_version=expected)
+            snap.commit_overwrite_partitions(
+                merged, expected_version=expected or 0, also_replace=retire
+            )
         except ConcurrentCommitError as e:
             last_conflict = e
             continue
@@ -270,6 +340,10 @@ def _merge_into_table(
             for msg in (_MULTI_MATCH_MSG, _DUP_UPDATE_MSG):
                 if msg in str(e):
                     raise RecordKeyError(msg) from e
+            if _OUT_OF_WINDOW_MSG in str(e):
+                raise ValueError(
+                    f"{_OUT_OF_WINDOW_MSG} [{', '.join(_window(item))}]"
+                ) from e
             raise
         return finish()
     raise ConcurrentCommitError(

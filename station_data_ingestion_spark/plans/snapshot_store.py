@@ -495,6 +495,19 @@ def _partition_of(rel_path: str, partition_cols: tuple[str, ...]) -> dict:
     return values
 
 
+def _partition_matches(e: dict, partition: dict) -> bool:
+    """True iff the entry's recorded partition has every filtered column
+    at the given value, or at one of the values of a list/tuple/set."""
+    for k, want in partition.items():
+        got = e["partition"].get(k)
+        if isinstance(want, (list, tuple, set, frozenset)):
+            if got not in want:
+                return False
+        elif got != want:
+            return False
+    return True
+
+
 def _norm_uri_rel(uri: str, data_prefix: str) -> str:
     """input_file_name() URI -> manifest-relative path (unquote once,
     then strip everything through the table's data dir)."""
@@ -577,7 +590,7 @@ class SnapshotTable:
         self,
         spark: SparkSession,
         path: str,
-        partition_cols: tuple[str, ...] = ("datatype", "period"),
+        partition_cols: tuple[str, ...] | None = None,
         stat_cols: tuple[str, ...] = ("date",),
         bloom_cols: tuple[str, ...] = (),
         bloom_bits: int = 1 << 14,
@@ -587,7 +600,21 @@ class SnapshotTable:
     ):
         self.spark = spark
         self.path = path.rstrip("/")
-        self.partition_cols = tuple(partition_cols)
+        # The PARTITION SPEC (partition_cols + partition_transforms) is
+        # recorded in every manifest. A spec left unset here is taken
+        # from the table's latest manifest (default ("datatype",
+        # "period") and no transforms for a new table); transforms left
+        # unset are the recorded ones, their columns appended to a
+        # passed partition_cols that lacks them -- a hidden column is
+        # layout the caller need not name. See _resolve_spec.
+        self._partition_cols = (
+            None if partition_cols is None else tuple(partition_cols)
+        )
+        self._partition_transforms = (
+            None if partition_transforms is None
+            else {k: tuple(v) for k, v in partition_transforms.items()}
+        )
+        self._recorded_spec: tuple | None = None
         # columns whose per-FILE min/max land in the manifest: zone-map
         # data skipping for non-partition columns. At 100 TB this prunes
         # files driver-side before Spark lists anything -- the same idea
@@ -618,16 +645,59 @@ class SnapshotTable:
         # HIDDEN PARTITIONING (Iceberg partition transforms): partition
         # columns DERIVED from a source column at write time and hidden
         # from reads -- users query the source column, never the layout.
-        # {pcol: ("day"|"month", src)} | {pcol: ("bucket", n, src)} |
-        # {pcol: ("truncate", n, src)}. Ranged reads on the source column
-        # prune partitions through the transform (monotone transforms:
-        # day/month/truncate); point reads prune bucket partitions too.
-        self.partition_transforms = dict(partition_transforms or {})
-        for pcol in self.partition_transforms:
-            if pcol not in self.partition_cols:
+        # {pcol: ("day"|"month"|"year", src)} | {pcol: ("bucket", n, src)}
+        # | {pcol: ("truncate", n, src)}. Ranged reads on the source
+        # column prune partitions through the transform (monotone
+        # transforms: day/month/year/truncate); point reads prune bucket
+        # partitions too.
+        for pcol in self._partition_transforms or {}:
+            if self._partition_cols is not None and pcol not in self._partition_cols:
                 raise ValueError(
                     f"transform column '{pcol}' must be in partition_cols"
                 )
+
+    def _resolve_spec(self) -> tuple[tuple[str, ...], dict[str, tuple]]:
+        """(partition_cols, partition_transforms) of this handle: the
+        passed ones, else the latest manifest's. Cached once a manifest
+        was read; a table with no manifest yet gets the defaults."""
+        cols, transforms = self._partition_cols, self._partition_transforms
+        if cols is not None and transforms is not None:
+            return cols, transforms
+        if self._recorded_spec is None:
+            v = self.latest_version()
+            if v is None:
+                return (
+                    ("datatype", "period") if cols is None else cols,
+                    transforms or {},
+                )
+            m = self._read_manifest(v)
+            self._recorded_spec = (
+                tuple(m.get("partition_cols", ("datatype", "period"))),
+                {k: tuple(s) for k, s in (m.get("partition_transforms") or {}).items()},
+            )
+        rec_cols, rec_transforms = self._recorded_spec
+        if cols is None:
+            return rec_cols, rec_transforms if transforms is None else transforms
+        if transforms is None:
+            transforms = rec_transforms
+            cols = cols + tuple(c for c in transforms if c not in cols)
+        return cols, transforms
+
+    @property
+    def partition_cols(self) -> tuple[str, ...]:
+        return self._resolve_spec()[0]
+
+    @property
+    def partition_transforms(self) -> dict[str, tuple]:
+        return self._resolve_spec()[1]
+
+    def _spec_doc(self) -> dict:
+        """The partition spec as a manifest records it."""
+        cols, transforms = self._resolve_spec()
+        doc: dict = {"partition_cols": list(cols)}
+        if transforms:
+            doc["partition_transforms"] = {k: list(s) for k, s in transforms.items()}
+        return doc
 
     # -- manifest plumbing -------------------------------------------------
 
@@ -738,6 +808,7 @@ class SnapshotTable:
             self.stat_cols,
             bloom_cols=self.bloom_cols,
             constraints=self.constraints,
+            partition_transforms=self.partition_transforms,
         )
         if dst.exists():
             raise ValueError(f"clone destination {dst_path} already exists")
@@ -750,7 +821,7 @@ class SnapshotTable:
         ]
         manifest = {
             "version": 1,
-            "partition_cols": list(self.partition_cols),
+            **self._spec_doc(),
             "files": files,
             "op": "clone",
         }
@@ -910,6 +981,7 @@ class SnapshotTable:
             self.stat_cols,
             bloom_cols=self.bloom_cols,
             constraints=self.constraints,
+            partition_transforms=self.partition_transforms,
         )
 
     def branches(self) -> dict[str, int]:
@@ -1064,7 +1136,7 @@ class SnapshotTable:
             raise
         manifest = {
             "version": fork_v + 1,
-            "partition_cols": list(self.partition_cols),
+            **self._spec_doc(),
             "files": entries,
             "op": "fast-forward",
         }
@@ -1205,6 +1277,7 @@ class SnapshotTable:
         with_row_ids: bool = False,
         _lineage: bool = False,
         _skip_eq: bool = False,
+        _manifest: dict | None = None,
     ) -> DataFrame | None:
         """DataFrame over a snapshot's files; None if no table.
 
@@ -1219,7 +1292,9 @@ class SnapshotTable:
         the newest version committed at or before that instant
         (:meth:`version_as_of`); mutually exclusive with ``version``.
         ``partition``: optional {col: value} filter applied DRIVER-SIDE to
-        the manifest, so pruned files are never even listed by Spark.
+        the manifest, so pruned files are never even listed by Spark. A
+        list/tuple/set value keeps any of its values. Unlike ``ranges``
+        this is exact: a file is read iff its recorded partition matches.
         ``ranges``: optional {col: (lo, hi)} inclusive bounds matched
         against the manifest's per-file min/max stats (zone maps): a
         file is skipped iff its recorded range cannot intersect the
@@ -1235,6 +1310,8 @@ class SnapshotTable:
         only keep extra files. The probed value must carry the column's
         Spark literal type (see __init__ note). Files without a bloom
         for the column are always kept.
+        ``_manifest``: the manifest of ``version``, already read by the
+        caller (no existence check, no second read).
         """
         if ref is not None:
             if version is not None or as_of is not None:
@@ -1247,14 +1324,17 @@ class SnapshotTable:
         v = self.latest_version() if version is None else version
         if v is None:
             return None
-        if version is not None:
-            fs, mpath, _ = _fs(self.spark, self._snap_path(version))
-            if not fs.exists(mpath):
-                raise FileNotFoundError(
-                    f"snapshot version {version} of {self.path} does not "
-                    "exist (never published, or vacuumed)"
-                )
-        manifest = self._read_manifest(v)
+        if _manifest is not None:
+            manifest = _manifest
+        else:
+            if version is not None:
+                fs, mpath, _ = _fs(self.spark, self._snap_path(version))
+                if not fs.exists(mpath):
+                    raise FileNotFoundError(
+                        f"snapshot version {version} of {self.path} does not "
+                        "exist (never published, or vacuumed)"
+                    )
+            manifest = self._read_manifest(v)
         unknown = set(manifest.get("features", [])) - _READER_FEATURES
         if unknown:
             raise RuntimeError(
@@ -1264,16 +1344,20 @@ class SnapshotTable:
             )
         entries = manifest["files"]
         if partition:
-            entries = [
-                e for e in entries
-                if all(e["partition"].get(k) == v_ for k, v_ in partition.items())
-            ]
+            entries = [e for e in entries if _partition_matches(e, partition)]
+        # the transforms of the version read (a handle that passed none
+        # needs no second manifest read to resolve them)
+        transforms = (
+            self._partition_transforms
+            if self._partition_transforms is not None
+            else {k: tuple(s) for k, s in (manifest.get("partition_transforms") or {}).items()}
+        )
         # HIDDEN-PARTITION pruning: a range on a transform SOURCE column
         # prunes partitions through the transform (monotone transforms);
         # an equality point on a bucket source prunes to one bucket.
         # Like zone maps: prune-only, files with no partition value kept.
-        if ranges and self.partition_transforms:
-            for pcol, spec in self.partition_transforms.items():
+        if ranges and transforms:
+            for pcol, spec in transforms.items():
                 src = spec[-1]
                 if src not in ranges:
                     continue
@@ -1299,10 +1383,10 @@ class SnapshotTable:
                     return True
 
                 entries = [e for e in entries if keep(e)]
-        if point and self.partition_transforms:
+        if point and transforms:
             from pyspark.sql import functions as F
 
-            for pcol, spec in self.partition_transforms.items():
+            for pcol, spec in transforms.items():
                 if spec[0] != "bucket" or spec[-1] not in point:
                     continue
                 n, val = int(spec[1]), point[spec[-1]]
@@ -1430,10 +1514,8 @@ class SnapshotTable:
             out = out.drop("_dv_file", "_dv_row")
         # transform-derived partition columns are LAYOUT, not schema:
         # hide them (Iceberg hidden partitioning)
-        for pcol in self.partition_transforms:
-            if pcol in out.columns:
-                out = out.drop(pcol)
-        return out
+        hidden = [p for p in transforms if any(p in e["partition"] for e in entries)]
+        return out.drop(*hidden) if hidden else out
 
     def _read_dv_frame(self, dvs: list[dict]) -> DataFrame:
         """Union of the snapshot's deletion-vector files as a
@@ -1585,6 +1667,10 @@ class SnapshotTable:
                 expr = F.date_format(F.col(spec[1]), "yyyy-MM-dd")
             elif kind == "month":
                 expr = F.date_format(F.col(spec[1]), "yyyy-MM")
+            elif kind == "year":
+                # the first four characters of the ISO text: a date, a
+                # timestamp and a 'YYYY-MM-DD' or 'YYYY-MM' string alike
+                expr = F.substring(F.col(spec[1]).cast("string"), 1, 4)
             elif kind == "bucket":
                 n, src = spec[1], spec[2]
                 # hash through a canonical STRING cast: xxhash64 is
@@ -1605,6 +1691,12 @@ class SnapshotTable:
             df = df.withColumn(pcol, expr)
         return df
 
+    def _rederive_transforms(self, df: DataFrame) -> DataFrame:
+        """Recompute every transform column of a rewrite from its source:
+        files of an older spec carry none, and an UPDATE may move a row."""
+        transforms = self.partition_transforms
+        return self._derive_transforms(df.drop(*transforms)) if transforms else df
+
     def _transform_partition_range(
         self, pcol: str, spec: tuple, lo, hi
     ) -> tuple | None:
@@ -1624,6 +1716,9 @@ class SnapshotTable:
         if kind == "month":
             l, h = iso(lo), iso(hi)
             return (l[:7] if l else None, h[:7] if h else None)
+        if kind == "year":
+            l, h = iso(lo), iso(hi)
+            return (l[:4] if l else None, h[:4] if h else None)
         if kind == "truncate" and isinstance(lo, (int, type(None))) and isinstance(
             hi, (int, type(None))
         ):
@@ -1679,7 +1774,7 @@ class SnapshotTable:
         version = base_v + 1
         manifest = {
             "version": version,
-            "partition_cols": list(self.partition_cols),
+            **self._spec_doc(),
             "files": m["files"],
             "generated": {**(m.get("generated") or {}), col: expr},
             "op": "add-generated-column",
@@ -1757,7 +1852,7 @@ class SnapshotTable:
         version = base_v + 1
         manifest = {
             "version": version,
-            "partition_cols": list(self.partition_cols),
+            **self._spec_doc(),
             "files": m["files"],
             "masks": {**(m.get("masks") or {}), col: [kind, arg]},
             "op": "set-mask",
@@ -1784,7 +1879,7 @@ class SnapshotTable:
         version = base_v + 1
         manifest = {
             "version": version,
-            "partition_cols": list(self.partition_cols),
+            **self._spec_doc(),
             "files": m["files"],
             "op": "drop-mask",
         }
@@ -1887,7 +1982,7 @@ class SnapshotTable:
         version = base_v + 1
         manifest = {
             "version": version,
-            "partition_cols": list(self.partition_cols),
+            **self._spec_doc(),
             "files": m["files"],
             "row_filters": {
                 **(m.get("row_filters") or {}), name: predicate
@@ -1916,7 +2011,7 @@ class SnapshotTable:
         version = base_v + 1
         manifest = {
             "version": version,
-            "partition_cols": list(self.partition_cols),
+            **self._spec_doc(),
             "files": m["files"],
             "row_filters": filters,
             "op": "drop-row-filter",
@@ -2039,7 +2134,7 @@ class SnapshotTable:
         version = base_v + 1
         manifest = {
             "version": version,
-            "partition_cols": list(self.partition_cols),
+            **self._spec_doc(),
             "renames": renames + [[old, new]],
             "files": m["files"],
             "op": "rename-column",
@@ -2090,7 +2185,7 @@ class SnapshotTable:
         version = base_v + 1
         manifest = {
             "version": version,
-            "partition_cols": list(self.partition_cols),
+            **self._spec_doc(),
             "files": m["files"],
             "dropped": m.get("dropped", []) + [col],
             "op": "drop-column",
@@ -2163,7 +2258,7 @@ class SnapshotTable:
         version = base_v + 1
         manifest = {
             "version": version,
-            "partition_cols": list(self.partition_cols),
+            **self._spec_doc(),
             "files": entries,
             # table-level record of initial defaults: RESTORE uses it to
             # re-tag restored (pre-add) files so the added column keeps
@@ -2218,7 +2313,7 @@ class SnapshotTable:
         version = base_v + 1
         manifest = {
             "version": version,
-            "partition_cols": list(self.partition_cols),
+            **self._spec_doc(),
             "files": entries,
             "widened": {**m.get("widened", {}), col: to_type},
             "op": "widen-column",
@@ -2288,11 +2383,13 @@ class SnapshotTable:
             )
         target = self._read_manifest(version)
         new_v = base_v + 1
+        spec = (
+            {k: target[k] for k in ("partition_cols", "partition_transforms") if k in target}
+            if "partition_cols" in target else self._spec_doc()
+        )
         manifest = {
             "version": new_v,
-            "partition_cols": target.get(
-                "partition_cols", list(self.partition_cols)
-            ),
+            **spec,
             "files": target["files"],
             "restored_from": version,
             "op": "restore",
@@ -2368,11 +2465,16 @@ class SnapshotTable:
         spec, and reads union the layouts transparently
         (:meth:`_read_entry_files`). Caveats, same as Iceberg's:
         ``commit_overwrite_partitions`` matches partitions of the NEW
-        spec only (old-spec files are never replaced by a
-        partition-level overwrite -- use ``delete_where`` for row-level
-        removal across specs), and driver-side ``read(partition=...)``
-        pruning only skips files whose own spec recorded that column."""
-        self.partition_cols = tuple(partition_cols)
+        spec only (old-spec files are replaced only when named in its
+        ``also_replace`` -- use ``delete_where`` for row-level removal
+        across specs), and driver-side ``read(partition=...)`` keeps
+        only files whose own spec recorded every filtered column.
+        Transforms on columns outside the new spec are dropped."""
+        transforms = self.partition_transforms
+        self._partition_cols = tuple(partition_cols)
+        self._partition_transforms = {
+            k: s for k, s in transforms.items() if k in self._partition_cols
+        }
 
     def count_rows(
         self, partition: dict | None = None, version: int | None = None
@@ -2878,9 +2980,15 @@ class SnapshotTable:
         changes: DataFrame | None = None,
         content_base: int | None = None,
         op: str | None = None,
+        also_replace: list[dict] | None = None,
     ) -> int:
         """Write df's rows, replacing exactly the partitions df contains.
         ``op`` labels the commit for history() (DESCRIBE HISTORY).
+
+        ``also_replace``: whole partitions (exact recorded partition
+        dicts, of any spec) the same commit unreferences too, whether or
+        not df has rows in them -- how a rewrite into a new spec retires
+        the old-spec files it read.
 
         ``content_base``: build the kept-file list (untouched
         partitions) from THIS manifest version instead of the table's
@@ -2919,7 +3027,8 @@ class SnapshotTable:
             df, cluster_by, cluster_partitions
         )
         replaced = {
-            tuple(sorted(e["partition"].items())) for e in new_entries
+            tuple(sorted(p.items()))
+            for p in [e["partition"] for e in new_entries] + (also_replace or [])
         }
         # cdf_none: the caller declares this commit changes NO logical
         # rows (recluster/compaction) so the change feed skips it.
@@ -3007,7 +3116,7 @@ class SnapshotTable:
                 json.dumps(
                     {
                         "token": token,
-                        "partition_cols": list(self.partition_cols),
+                        **self._spec_doc(),
                         "files": entries,
                     },
                     indent=1,
@@ -3163,7 +3272,7 @@ class SnapshotTable:
             version = (base_v or 0) + 1
             manifest = {
                 "version": version,
-                "partition_cols": list(self.partition_cols),
+                **self._spec_doc(),
                 "files": kept + new_entries,
             }
             _carry_meta(manifest, src_m)
@@ -3197,6 +3306,7 @@ class SnapshotTable:
         fs, _, jvm = _fs(self.spark, staging)
         HPath = jvm.org.apache.hadoop.fs.Path
         entries = []
+        pcols = self.partition_cols
         for rel in _list_parquet_rel(self.spark, staging):
             part_dir, _, fname = rel.rpartition("/")
             dest_rel = (
@@ -3209,7 +3319,7 @@ class SnapshotTable:
                 raise IOError(f"failed to promote {rel} into {self.path}/data")
             entry = {
                 "path": dest_rel,
-                "partition": _partition_of(rel, self.partition_cols),
+                "partition": _partition_of(rel, pcols),
             }
             if stats and rel in stats:
                 entry["stats"] = stats[rel]
@@ -3264,7 +3374,7 @@ class SnapshotTable:
         version = base_v + 1
         manifest = {
             "version": version,
-            "partition_cols": list(self.partition_cols),
+            **self._spec_doc(),
             "files": kept + new_entries,
         }
         _carry_meta(manifest, base_m)
@@ -3554,7 +3664,7 @@ class SnapshotTable:
         )
         if base_m.get("row_tracking"):
             df = self._attach_row_ids(df, touched)
-        df = df.drop("_dv_file", "_dv_row")
+        df = self._rederive_transforms(df.drop("_dv_file", "_dv_row"))
         staging = f"{self.path}/{_STAGING}/{uuid.uuid4().hex}"
         df.write.partitionBy(*self.partition_cols).parquet(staging)
         stats = self._file_stats(staging, list(self.stat_cols))
@@ -3626,7 +3736,7 @@ class SnapshotTable:
         version = base_v + 1
         manifest = {
             "version": version,
-            "partition_cols": list(self.partition_cols),
+            **self._spec_doc(),
             "files": files,
             "op": "enable-row-tracking",
             "row_tracking": True,
@@ -3959,7 +4069,7 @@ class SnapshotTable:
         df = self._apply_eq_deletes(df, eqs, touched)
         if base_m.get("row_tracking"):
             df = self._attach_row_ids(df, touched)
-        df = df.drop("_dv_file", "_dv_row")
+        df = self._rederive_transforms(df.drop("_dv_file", "_dv_row"))
         staging = f"{self.path}/{_STAGING}/{uuid.uuid4().hex}"
         df.write.partitionBy(*self.partition_cols).parquet(staging)
         stats = self._file_stats(staging, list(self.stat_cols))
@@ -4110,7 +4220,9 @@ class SnapshotTable:
             # as a physical column before the transform
             df = self._attach_row_ids(df, touched)
         df = df.drop("_dv_file", "_dv_row")
-        rewritten = self._enforce_constraints(transform(df, cond))
+        rewritten = self._enforce_constraints(
+            self._rederive_transforms(transform(df, cond))
+        )
         staging = f"{self.path}/{_STAGING}/{uuid.uuid4().hex}"
         rewritten.write.partitionBy(*self.partition_cols).parquet(staging)
         stats = self._file_stats(staging, list(self.stat_cols))

@@ -137,35 +137,40 @@ def test_merge_single_shuffle_per_side(spark):
 
 
 def test_obs_table_read_prunes_partitions(spark, tmp_path):
-    """read_obs_table's (datatype, period) slice must prune the scan to
-    that slice's files -- at 100 TB this is what bounds a merge to its
-    slice instead of scanning the whole observation table. The snapshot
-    manifest prunes driver-side: the scan lists only the slice's files."""
+    """read_obs_table must prune the scan to the years of the spec's
+    window in its (datatype, period) slice -- at 100 TB this is what
+    bounds a merge to its window instead of scanning the whole
+    observation table. The snapshot manifest prunes driver-side: the
+    scan lists only that year's files."""
     from station_data_ingestion_spark.plans.jobspec import DataItemSpec
-    from station_data_ingestion_spark.plans.runner import read_obs_table
-    from station_data_ingestion_spark.plans.snapshot_store import SnapshotTable
+    from station_data_ingestion_spark.plans.runner import _obs_table, read_obs_table
 
     df = spark.createDataFrame(
         [("1", "2022-03-01", 1.0, "temp", "day", "raw"),
+         ("3", "2021-12-31", 3.0, "temp", "day", "raw"),
          ("2", "2022-03-01", 2.0, "rain", "day", "raw")],
         "station_id string, date string, value double, "
         "datatype string, period string, fill string",
     )
     path = str(tmp_path / "obs")
-    t = SnapshotTable(spark, path)
+    t = _obs_table(spark, path)
     t.commit_overwrite_partitions(df)
     spec = DataItemSpec(
         files=[], datatype="temp", period="day", fill="raw",
         start_date="2022-03-01", end_date="2022-03-01",
     )
+    entries = t._read_manifest(t.latest_version())["files"]
     want = {
-        e["path"] for e in t._read_manifest(t.latest_version())["files"]
-        if e["partition"] == {"datatype": "temp", "period": "day"}
+        e["path"] for e in entries
+        if e["partition"] == {"datatype": "temp", "period": "day", "year": "2022"}
     }
+    assert len({e["partition"]["year"] for e in entries
+                if e["partition"]["datatype"] == "temp"}) == 2
     got = read_obs_table(spark, path, spec)
     files = {f.split("/obs/data/", 1)[1] for f in got.inputFiles()}
     assert want and files == want
     assert [r.station_id for r in got.collect()] == ["1"]
+    assert "year" not in got.columns
 
 
 def test_ingestion_unpivot_no_shuffle(spark, tmp_path):

@@ -509,6 +509,7 @@ def test_merge_failure_waits_for_metadata_write(spark, tmp_path, mode):
         run_job(spark, _ranged_job(str(p)), str(tmp_path / "obs"),
                 str(tmp_path / "m.json"), metadata_transport=slow_transport,
                 **_MODES[mode])
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()  # tracker fills async
     assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
     assert len(read_jsonl_docs(out)) == len(rows)
 
@@ -752,6 +753,10 @@ def test_convert_plain_table(spark, tmp_path, monkeypatch):
     assert _key_rows(spark, table) == want
     df = read_table(spark, table)
     assert dict(df.dtypes)["datatype"] == dict(df.dtypes)["period"] == "string"
+    assert "year" not in df.columns
+    m = SnapshotTable(spark, table)._read_manifest(1)
+    assert m["partition_transforms"] == {"year": ["year", "date"]}
+    assert {e["partition"]["year"] for e in m["files"]} == {"2022"}  # the year layout
     assert _top_level_slices(table) == []
     snaps = sorted(os.listdir(os.path.join(table, "_snapshots")))
 
@@ -772,3 +777,160 @@ def test_convert_plain_table(spark, tmp_path, monkeypatch):
                ("s099", "2022-03-01", "850", "day", "raw", 5.0),
                ("s099", "2022-03-02", "850", "day", "raw", 6.0)]
     assert _key_rows(spark, table) == sorted(merged)
+
+
+_OBS_SCHEMA = ("station_id string, date string, value double, "
+               "datatype string, period string, fill string")
+
+
+def _obs_rows(spark, rows):
+    return spark.createDataFrame(
+        [(s, d, v, "temperature", "day", "raw") for s, d, v in rows], _OBS_SCHEMA
+    )
+
+
+def _item(start, end, period="day"):
+    return DataItemSpec(files=[], datatype="temperature", period=period, fill="raw",
+                        start_date=start, end_date=end)
+
+
+def _entries(spark, table):
+    from station_data_ingestion_spark.plans.snapshot_store import SnapshotTable
+
+    t = SnapshotTable(spark, table)
+    return t._read_manifest(t.latest_version())["files"]
+
+
+def test_merge_keeps_year_files_its_zone_maps_would_skip(spark, tmp_path):
+    """A merge reads its window's years by partition value only. Here the
+    2022 year holds two files, and one file's date zone map lies outside
+    the merge window: a zone-map pruned read would skip that file and the
+    year's replacement would drop its rows."""
+    from station_data_ingestion_spark.plans.runner import _merge_into_table, _obs_table
+
+    table = str(tmp_path / "obs")
+    old = [(f"s{i}", "2021-12-31", float(i)) for i in range(4)]
+    seed = old + [(f"s{i}", d, float(i)) for i in range(4)
+                  for d in ("2022-01-10", "2022-01-11", "2022-06-01", "2022-06-02")]
+    snap = _obs_table(spark, table)
+    snap.commit_overwrite_partitions(_obs_rows(spark, old))
+    snap.commit_overwrite_partitions(
+        _obs_rows(spark, seed[len(old):]), cluster_by=("date",), cluster_partitions=2)
+    year = [e for e in _entries(spark, table) if e["partition"]["year"] == "2022"]
+    assert len(year) == 2 and sorted(e["stats"]["date"] for e in year) == [
+        ["2022-01-10", "2022-01-11"], ["2022-06-01", "2022-06-02"]]
+    y2021 = [e for e in _entries(spark, table) if e["partition"]["year"] == "2021"]
+
+    stats = _merge_into_table(
+        spark, _obs_rows(spark, [("s0", "2022-06-02", 9.0), ("s9", "2022-06-02", 1.0)]),
+        _item("2022-06-01", "2022-06-02"), str(table))
+    assert (stats.created, stats.replaced) == (1, 1)
+    want = sorted({**{(s, d): v for s, d, v in seed},
+                   ("s0", "2022-06-02"): 9.0, ("s9", "2022-06-02"): 1.0}.items())
+    got = sorted(((r.station_id, r.date), r.value) for r in read_table(spark, table).collect())
+    assert got == want
+    # 2021 is outside the window: not rewritten
+    assert [e for e in _entries(spark, table) if e["partition"]["year"] == "2021"] == y2021
+
+
+def test_merge_refuses_rows_outside_its_window(spark, tmp_path):
+    """An observation dated outside the item's window (or undated) fails
+    the merge's own write: the merge read only the window's years, so the
+    row would replace a year it never read. Nothing is published."""
+    from station_data_ingestion_spark.plans.runner import _merge_into_table
+
+    table = str(tmp_path / "obs")
+    seed = [("s0", "2021-06-01", 1.0), ("s1", "2021-06-01", 2.0), ("s0", "2022-03-01", 3.0)]
+    _merge_into_table(spark, _obs_rows(spark, seed), _item("2021-01-01", "2022-12-31"), table)
+    before = _key_rows(spark, table)
+    files = sorted(e["path"] for e in _entries(spark, table))
+    for stray in ("2021-06-02", None):
+        rows = [("s2", "2022-03-01", 4.0), ("s2", stray, 5.0)]
+        with pytest.raises(ValueError, match=r"outside its data item's window \[2022-03-01, 2022-03-02\]"):
+            _merge_into_table(spark, _obs_rows(spark, rows), _item("2022-03-01", "2022-03-02"), table)
+    assert _key_rows(spark, table) == before
+    assert sorted(e["path"] for e in _entries(spark, table)) == files
+
+
+def test_old_layout_slice_upgrades_in_its_first_merge(spark, tmp_path, monkeypatch):
+    """A table of the (datatype, period) layout: the first merge into a
+    slice reads the whole slice and rewrites it in the year layout in one
+    commit. Cut once before its publish and re-run, it ends equal to an
+    uninterrupted run, with no entry of the old layout left in the slice;
+    another slice keeps its files."""
+    from station_data_ingestion_spark.plans.snapshot_store import SnapshotTable
+
+    seed = [(f"s{i}", d, float(i), dt) for i in range(5) for d in ("2021-12-31", "2022-03-01")
+            for dt in ("temperature", "rainfall")]
+    csv = tmp_path / "cron.csv"
+    csv.write_text("SKN,X2022.03.01,X2022.03.02\ns0,9.0,1.0\ns7,2.0,3.0\n")
+    job = JobSpec(data=[DataItemSpec(
+        files=[str(csv)], datatype="temperature", period="day", fill="raw",
+        start_date="2022-03-01", end_date="2022-03-02")])
+
+    def old_layout(name):
+        table = str(tmp_path / name)
+        SnapshotTable(spark, table, ("datatype", "period")).commit_overwrite_partitions(
+            spark.createDataFrame([(s, d, v, dt, "day", "raw") for s, d, v, dt in seed], _OBS_SCHEMA))
+        assert "partition_transforms" not in SnapshotTable(spark, table)._read_manifest(1)
+        return table
+
+    baseline = old_layout("baseline")
+    assert (run_job(spark, job, baseline)[str(csv)].created) == 3
+    table = old_layout("obs")
+    rain = sorted(e["path"] for e in _entries(spark, table)
+                  if e["partition"]["datatype"] == "rainfall")
+
+    def crash(*a, **kw):
+        raise RuntimeError("simulated crash")
+
+    monkeypatch.setattr(SnapshotTable, "_write_manifest_exclusive", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_job(spark, job, table, str(tmp_path / "m.json"))
+    monkeypatch.undo()
+    assert SnapshotTable(spark, table).latest_version() == 1
+    stats = run_job(spark, job, table, str(tmp_path / "m.json"))[str(csv)]
+    assert (stats.created, stats.replaced) == (3, 1)
+    assert _key_rows(spark, table) == _key_rows(spark, baseline)
+    temp = [e["partition"] for e in _entries(spark, table)
+            if e["partition"]["datatype"] == "temperature"]
+    assert sorted({p["year"] for p in temp}) == ["2021", "2022"]  # no old-layout entry
+    assert sorted(e["path"] for e in _entries(spark, table)
+                  if e["partition"]["datatype"] == "rainfall") == rain
+    assert "year" not in read_table(spark, table).columns
+
+
+def test_month_period_round_trips_by_year(spark, tmp_path):
+    """A period="month" item ('YYYY-MM' dates) goes through run_job into
+    the year layout, reads back whole, and a later window rewrites only
+    its own year."""
+    csv = tmp_path / "monthly.csv"
+    csv.write_text("SKN,X2022.11,X2022.12,X2023.01\n" + "".join(
+        f"s{i},{i}.1,{i}.2,{i}.3\n" for i in range(4)))
+    table = str(tmp_path / "obs")
+
+    def job(start, end):
+        return JobSpec(data=[DataItemSpec(
+            files=[str(csv)], datatype="rainfall", period="month", fill="raw",
+            start_date=start, end_date=end)])
+
+    assert run_job(spark, job("2022-11", "2023-01"), table)[str(csv)].created == 12
+    got = sorted((r.station_id, r.date, r.value) for r in read_table(spark, table).collect())
+    assert got == sorted((f"s{i}", m, float(f"{i}.{k}")) for i in range(4)
+                         for k, m in ((1, "2022-11"), (2, "2022-12"), (3, "2023-01")))
+    before = {e["path"] for e in _entries(spark, table) if e["partition"]["year"] == "2022"}
+    assert before
+    csv.write_text("SKN,X2023.01\n" + "".join(f"s{i},7.5\n" for i in range(4)))
+    assert run_job(spark, job("2023-01", "2023-01"), table)[str(csv)].replaced == 4
+    assert {e["path"] for e in _entries(spark, table) if e["partition"]["year"] == "2022"} == before
+    assert read_table(spark, table, partition={"period": "month"}).count() == 12
+
+
+def test_read_table_columns_hide_the_year(spark, tmp_path, wide_csv_day):
+    """The year partition is layout, not schema: a new table reads back
+    with the columns the (datatype, period) layout had, in their order."""
+    table = str(tmp_path / "obs")
+    run_job(spark, make_job(wide_csv_day), table)
+    assert read_table(spark, table).columns == [
+        "date", "fill", "station_id", "aggregation", "value", "datatype", "period"]
+    assert {e["partition"]["year"] for e in _entries(spark, table)} == {"2022"}

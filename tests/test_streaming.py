@@ -264,7 +264,7 @@ def test_stream_merge_commits_snapshot_versions_with_zone_stats(spark, tmp_path)
     man = t._read_manifest(v1)
     assert man["files"], "stream merge published no files"
     for e in man["files"]:
-        assert e["partition"] == {"datatype": "temperature", "period": "day"}
+        assert e["partition"] == {"datatype": "temperature", "period": "day", "year": "2022"}
         assert "date" in e.get("stats", {}), e
         mn, mx = e["stats"]["date"]
         assert mn >= "2022-03-01" and mx <= "2022-03-03"
