@@ -408,13 +408,17 @@ def run_job(
     all up front), keeping the URL as manifest key. Paths the driver
     cannot open (globs, hdfs:// URIs) take the declarative parse.
 
+    A cron-sized group is parsed on the driver (see
+    :func:`read_wide_units`), so a cold run starts no Python worker.
+
     ``metadata_transport``: optional zero-arg factory returning a sink
     transport (see operators.sinks). When given, the station metadata of
     each group's files (one union for a batch; a ranged file's only on
-    its first contact) is written through it as sparse JSON docs (nodata
-    fields dropped [reference: src/driver.py:144-152]) on a background
-    thread, side by side with the group's parse, merge and publish, and
-    joined before the file's manifest record. The observation publish does
+    its first contact) is planned (the metadata CSV scan) and written
+    through it as sparse JSON docs (nodata fields dropped [reference:
+    src/driver.py:144-152]) on a background thread, side by side with the
+    group's parse, merge and publish, and joined before the file's
+    manifest record. The observation publish does
     not wait for the docs: if the metadata write fails, the merge may be
     published but the file is not recorded, so a re-run replays the
     (idempotent) merge and rewrites the docs. A failure on either side is
@@ -424,8 +428,8 @@ def run_job(
     manifest = Manifest(manifest_path) if manifest_path else None
     group_size = ranges_per_commit or spark.sparkContext.defaultParallelism
     results: dict[str, MergeStats] = {}
-    # Station metadata is written on this one background thread while the
-    # calling thread merges.
+    # Station metadata is planned and written on this one background thread
+    # while the calling thread parses and merges.
     docs_pool = ThreadPoolExecutor(max_workers=1, thread_name_prefix="station-docs")
     try:
         for item in job.data:
@@ -447,27 +451,37 @@ def run_job(
                     units = [u for u in units if f"{u[1]}-{u[2]}" not in done]
                     size = group_size if split else max(1, len(units))
                     groups = [units[i : i + size] for i in range(0, len(units), size)]
-                    metas = (
-                        metadata_from_wide(
-                            scan_wide_csv(spark, p, layouts[p].columns),
-                            classify_headers(layouts[p].columns, item)[0],
-                            job.location,
-                        )
-                        for p in paths
-                    )
+
+                    def metas(paths=paths, layouts=layouts, item=item):
+                        return [
+                            metadata_from_wide(
+                                scan_wide_csv(spark, p, layouts[p].columns),
+                                classify_headers(layouts[p].columns, item)[0],
+                                job.location,
+                            )
+                            for p in paths
+                        ]
                 else:  # glob / hdfs:// path: the declarative parse, one group
                     obs, meta = ingest_wide_csv(spark, paths[0], item, job.location)
-                    groups, metas = [None], [meta]
+                    groups, metas = [None], lambda meta=meta: [meta]
                 docs = None
                 if metadata_transport is not None and not done:
-                    meta = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), metas)
-                    docs = docs_pool.submit(
-                        inheritable_thread_target(spark)(write_docs),
-                        sparse_json_docs(meta, nodata=item.nodata),
-                        metadata_transport,
-                        retries=job.retries,
-                        max_parallelism=job.concurrency,
-                    )
+
+                    def write_metadata(metas=metas, item=item):
+                        # planned here, on the docs thread: a cold plan of
+                        # the metadata scan takes about a second, and must
+                        # not hold up the parse and merge
+                        meta = reduce(
+                            lambda a, b: a.unionByName(b, allowMissingColumns=True), metas()
+                        )
+                        write_docs(
+                            sparse_json_docs(meta, nodata=item.nodata),
+                            metadata_transport,
+                            retries=job.retries,
+                            max_parallelism=job.concurrency,
+                        )
+
+                    docs = docs_pool.submit(inheritable_thread_target(spark)(write_metadata))
                 total = MergeStats(created=0, replaced=0)
                 for i, group in enumerate(groups):
                     if group is not None:

@@ -1181,6 +1181,17 @@ class SnapshotTable:
             stream.close()
         return json.loads(text)
 
+    def _read_published_manifest(self, version: int) -> dict:
+        """:meth:`_read_manifest` of a version the caller named, which
+        may never have been published or may have been vacuumed."""
+        fs, mpath, _ = _fs(self.spark, self._snap_path(version))
+        if not fs.exists(mpath):
+            raise FileNotFoundError(
+                f"snapshot version {version} of {self.path} does not "
+                "exist (never published, or vacuumed)"
+            )
+        return self._read_manifest(version)
+
     def _stamp_sequence(self, version: int, manifest: dict) -> None:
         """Assign the manifest's DATA SEQUENCE NUMBER (Iceberg v2) and
         stamp it onto entries new to this manifest. ``seq_hwm`` is a
@@ -1326,14 +1337,9 @@ class SnapshotTable:
             return None
         if _manifest is not None:
             manifest = _manifest
+        elif version is not None:
+            manifest = self._read_published_manifest(version)
         else:
-            if version is not None:
-                fs, mpath, _ = _fs(self.spark, self._snap_path(version))
-                if not fs.exists(mpath):
-                    raise FileNotFoundError(
-                        f"snapshot version {version} of {self.path} does not "
-                        "exist (never published, or vacuumed)"
-                    )
             manifest = self._read_manifest(v)
         unknown = set(manifest.get("features", [])) - _READER_FEATURES
         if unknown:
@@ -4608,15 +4614,19 @@ def read_table(
     ``plans.runner.convert_plain_table``.
     """
     t = SnapshotTable(spark, path)
-    if not t.exists():
+    # one listing of _snapshots/ and one manifest read per call
+    latest = t.latest_version()
+    if latest is None:
         raise FileNotFoundError(
             f"{path} has no snapshot manifest; a plain parquet table "
             "converts with plans.runner.convert_plain_table"
         )
-    df = t.read(partition=partition, ranges=ranges, version=version)
+    v = latest if version is None else version
+    manifest = t._read_manifest(v) if v == latest else t._read_published_manifest(v)
+    df = t.read(partition=partition, ranges=ranges, version=v, _manifest=manifest)
     if df is None and (partition or ranges):
         # pruned to nothing: a valid empty result, not a missing table
-        full = t.read(version=version)
+        full = t.read(version=v, _manifest=manifest)
         if full is not None:
             return full.limit(0)
     if df is None:

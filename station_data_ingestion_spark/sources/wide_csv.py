@@ -10,10 +10,12 @@ src/tapis_direct_driver.py:84-184]:
 One ingestion path runs it for every file the driver can open:
 :func:`plan_wide_units` (driver) parses each header once and cuts files
 into ``(path, start, end)`` byte-range work units (also the runner's unit
-of resume); :func:`read_wide_units` (executors) parses them with pyarrow's
-C++ CSV parser. The declarative :func:`observations_from_wide` is the
-streaming transform, the test reference, and the fallback for paths the
-driver cannot open (globs, directories, hdfs:// URIs).
+of resume); :func:`read_wide_units` parses them with pyarrow's C++ CSV
+parser: on the driver for a group as small as a cron day (no Python
+worker to start), in executor tasks otherwise. The declarative
+:func:`observations_from_wide` is the streaming transform, the test
+reference, and the fallback for paths the driver cannot open (globs,
+directories, hdfs:// URIs).
 
 Semantic traps handled (SURVEY §7):
 - nodata is a STRING sentinel compared post-read, never null
@@ -175,7 +177,7 @@ def _parse_wide_csv_bytes(
     iso_dates: list[str],
     nodata: str,
 ):
-    """Arrow parse core of the unit reader: wide-CSV bytes -> long pandas frame.
+    """Arrow parse core of the unit reader: wide-CSV bytes -> long Arrow table.
 
     pyarrow.csv C++ parse with all-string columns (no null coercion, so
     the nodata sentinel survives literally), column-major unpivot as an
@@ -191,7 +193,8 @@ def _parse_wide_csv_bytes(
     (float('') [src/tapis_direct_driver.py:145]); raising would contradict
     the pad/truncate contract, whose padded cells are ''. Whitespace-only
     cells still raise on both paths (they fail the numeric cast).
-    Runs inside executors; returns None when nothing survives.
+    Runs on the driver or inside executors; returns None when nothing
+    survives.
     """
     import io
 
@@ -266,7 +269,7 @@ def _parse_wide_csv_bytes(
             "date": date_col.filter(keep),
             "value": cast,
         }
-    ).to_pandas()
+    )
 
 
 def plan_file_ranges(path: str, split_bytes: int) -> list[tuple[int, int]]:
@@ -298,6 +301,20 @@ def plan_file_ranges(path: str, split_bytes: int) -> list[tuple[int, int]]:
 # Bytes of whole lines one reader task parses at a time: ~4k rows of a
 # 365-column matrix, under a 10k-line Arrow batch of the same file.
 _READ_CHUNK_BYTES = 8 << 20
+# Largest group the driver parses itself, in estimated output cells (data
+# lines x in-range date columns): a cron day is ~600. Below this, starting
+# a Python worker (seconds, in a cold process) costs more than the parse;
+# above it, the driver's single-threaded parse loses to the executors'.
+_DRIVER_PARSE_CELLS = 10_000
+# The unit reader's output, as a StructType rather than DDL text: a cold
+# JVM's first DDL parse takes ~0.5 s.
+_UNIT_SCHEMA = T.StructType(
+    [
+        T.StructField("station_id", T.StringType()),
+        T.StructField("date", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+    ]
+)
 
 
 class WideLayout(NamedTuple):
@@ -374,13 +391,62 @@ def plan_wide_units(
     return units, layouts
 
 
+def _read_chunks(path: str, start: int, end: int, chunk: int):
+    """Whole-line chunks of about ``chunk`` bytes of one unit's range."""
+    # units end just after a newline (or at EOF), so completing the last
+    # line of a chunk with readline never reads past ``end``
+    with open(path, "rb") as f:
+        f.seek(start)
+        while f.tell() < end:
+            raw = f.read(min(chunk, end - f.tell()))
+            yield (raw + f.readline()) if f.tell() < end else raw
+
+
+def _data_lines(raw: bytes, layout: WideLayout) -> list[str]:
+    """A chunk's lines, less any repeat of its file's header line."""
+    return [
+        ln for ln in raw.decode("utf-8", errors="replace").splitlines()
+        if ln != layout.header_line
+    ]
+
+
+def _parse_lines(lines: list[str], layout: WideLayout, nodata: str):
+    """Parse one chunk's data lines; an Arrow table, or None when empty."""
+    if not lines:
+        return None
+    buf = ("\n".join(lines) + "\n").encode("utf-8")
+    return _parse_wide_csv_bytes(
+        buf, layout.columns, layout.date_cols, layout.iso_dates, nodata
+    )
+
+
+def _parse_on_driver(units, layouts, nodata: str):
+    """The group's long Arrow table, parsed here, or None when the group
+    is over the driver bounds: more bytes than one ``_READ_CHUNK_BYTES``
+    read, or more than ``_DRIVER_PARSE_CELLS`` estimated output cells."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if sum(e - s for _p, s, e in units) > _READ_CHUNK_BYTES:
+        return None
+    chunks = [
+        (_data_lines(raw, layouts[p]), layouts[p])
+        for p, s, e in units
+        for raw in _read_chunks(p, s, e, _READ_CHUNK_BYTES)
+    ]
+    if sum(len(ln) * len(lay.date_cols) for ln, lay in chunks) > _DRIVER_PARSE_CELLS:
+        return None
+    tables = [t for ln, lay in chunks if (t := _parse_lines(ln, lay, nodata)) is not None]
+    return pa.concat_tables(tables) if tables else to_arrow_schema(_UNIT_SCHEMA).empty_table()
+
+
 def read_wide_units(
     spark: SparkSession,
     units: list[tuple[str, int, int]],
     layouts: dict[str, WideLayout],
     spec: DataItemSpec,
 ) -> DataFrame:
-    """Unit reader: parse byte-range units into long observations.
+    """Unit reader: parse one group of byte-range units into long observations.
 
     Same output schema and semantics as :func:`observations_from_wide`
     (nodata/empty filter, strict raise-on-garbage cast, PERMISSIVE-style
@@ -388,51 +454,49 @@ def read_wide_units(
     documented divergence: a mid-file line identical to the header is
     dropped rather than a strict-cast error (the concatenated-files case).
 
-    Units are addressed by id from a ``spark.range`` (one row per unit,
-    at most ``defaultParallelism`` partitions, no Exchange); each task
-    seeks into its file and runs pyarrow.csv's C++ parse
-    (:func:`_parse_wide_csv_bytes`) on whole-line chunks of about
-    ``_READ_CHUNK_BYTES``, so its memory is bounded whatever the unit size.
-    Paths must be readable from executors (shared FS). Quoted embedded
-    newlines are not supported (nor by the reference's line-streamed HTTP
-    scan [src/tapis_direct_driver.py:104-107]).
+    Placement. A group whose bytes fit in one ``_READ_CHUNK_BYTES`` read
+    and whose estimated output (data lines x in-range date columns) is at
+    most ``_DRIVER_PARSE_CELLS`` -- a cron day -- is parsed right here on
+    the driver and handed to Spark as an Arrow table: no Python worker
+    starts (in a cold process that start, not the parse, was the cron's
+    critical path) and the plan has no Python stage. If that parse
+    raises, the group goes to the executor reader below, so a bad cell
+    still fails lazily, when the plan runs, with the same message.
+
+    Larger groups are read in executors: units are addressed by id from
+    a ``spark.range`` (one row per unit, at most ``defaultParallelism``
+    partitions, no Exchange); each task seeks into its file and runs
+    pyarrow.csv's C++ parse (:func:`_parse_wide_csv_bytes`) on whole-line
+    chunks of about ``_READ_CHUNK_BYTES``, so its memory is bounded
+    whatever the unit size. Paths must be readable from executors
+    (shared FS). Quoted embedded newlines are not supported (nor by the
+    reference's line-streamed HTTP scan [src/tapis_direct_driver.py:104-107]).
     """
     layouts = {p: layouts[p] for p, _s, _e in units}
     nodata, chunk = spec.nodata, _READ_CHUNK_BYTES
+    try:
+        parsed = _parse_on_driver(units, layouts, nodata)
+    except Exception:  # surfaces, lazily, from the executor reader
+        parsed = None
+    if parsed is not None:
+        base = spark.createDataFrame(parsed, _UNIT_SCHEMA)
+    else:
 
-    def read_chunks(path, start, end):
-        # units end just after a newline (or at EOF), so completing the
-        # last line of a chunk with readline never reads past ``end``
-        with open(path, "rb") as f:
-            f.seek(start)
-            while f.tell() < end:
-                raw = f.read(min(chunk, end - f.tell()))
-                yield (raw + f.readline()) if f.tell() < end else raw
+        def parse_units(batches):
+            for pdf in batches:
+                for uid in pdf["id"]:
+                    path, start, end = units[uid]
+                    layout = layouts[path]
+                    for raw in _read_chunks(path, start, end, chunk):
+                        out = _parse_lines(_data_lines(raw, layout), layout, nodata)
+                        if out is not None:
+                            yield out.to_pandas()
 
-    def parse_units(batches):
-        for pdf in batches:
-            for uid in pdf["id"]:
-                path, start, end = units[uid]
-                layout = layouts[path]
-                for raw in read_chunks(path, start, end):
-                    lines = [
-                        ln for ln in raw.decode("utf-8", errors="replace").splitlines()
-                        if ln != layout.header_line
-                    ]
-                    if not lines:
-                        continue
-                    buf = ("\n".join(lines) + "\n").encode("utf-8")
-                    out = _parse_wide_csv_bytes(
-                        buf, layout.columns, layout.date_cols, layout.iso_dates, nodata
-                    )
-                    if out is not None:
-                        yield out
-
-    n = len(units)
-    ids = spark.range(
-        n, numPartitions=max(1, min(n, spark.sparkContext.defaultParallelism))
-    )
-    base = ids.mapInPandas(parse_units, "station_id string, date string, value double")
+        n = len(units)
+        ids = spark.range(
+            n, numPartitions=max(1, min(n, spark.sparkContext.defaultParallelism))
+        )
+        base = ids.mapInPandas(parse_units, _UNIT_SCHEMA)
     for k, v in spec.static_properties.items():
         base = base.withColumn(k, F.lit(v).cast("string"))
     return base

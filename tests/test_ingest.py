@@ -22,6 +22,24 @@ def make_spec(**kw):
     return DataItemSpec(**base)
 
 
+DRIVER_PARSE_CELLS = wide_csv._DRIVER_PARSE_CELLS
+
+
+def parse_paths(monkeypatch):
+    """Each parse of a small local file in turn, as ``(name, fast)`` for
+    ingest_wide_csv: the unit reader on the driver (a cron-sized group's
+    default), the unit reader in executor tasks (driver cell bound
+    patched to 0), and the declarative unpivot."""
+    for name, cells in (("driver", DRIVER_PARSE_CELLS), ("executor", 0)):
+        monkeypatch.setattr(wide_csv, "_DRIVER_PARSE_CELLS", cells)
+        yield name, True
+    yield "declarative", False
+
+
+def python_stage(df) -> bool:
+    return "MapInPandas" in df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_classify_headers_drops_unknown_and_prunes(spark, wide_csv_day):
     spec = make_spec()
     cols = wide_csv.read_header(spark, wide_csv_day)
@@ -61,13 +79,17 @@ def test_metadata_branch(spark, wide_csv_day):
     assert m["0042"]["id_field"] == "skn"
 
 
-def test_strict_cast_raises_on_garbage(spark, tmp_path):
+def test_strict_cast_raises_on_garbage(spark, tmp_path, monkeypatch):
+    """Garbage fails when the plan runs, not when it is built: a driver
+    parse that raises hands the group to the executor reader."""
     p = tmp_path / "bad.csv"
     p.write_text("SKN,X2022.03.02\n1,oops\n")
     spec = make_spec()
-    obs, _ = wide_csv.ingest_wide_csv(spark, str(p), spec)
-    with pytest.raises(Exception, match="non-numeric observation value"):
-        obs.collect()
+    for name, fast in parse_paths(monkeypatch):
+        obs, _ = wide_csv.ingest_wide_csv(spark, str(p), spec, fast=fast)
+        assert python_stage(obs) == fast, name
+        with pytest.raises(Exception, match="non-numeric observation value"):
+            obs.collect()
 
 
 def test_month_period(spark, tmp_path):
@@ -93,27 +115,66 @@ def test_flagship_groupby_over_ingested(spark, wide_csv_day):
     assert out["0042"] == round((18.0 + 19.5 + 20.0) / 3, 3)
 
 
-def test_fast_and_declarative_paths_agree(spark, wide_csv_day):
-    """The Arrow-native fast parse and the declarative unpivot produce the
-    same rows/schema on the fixture (incl. its short and empty rows)."""
+def test_fast_and_declarative_paths_agree(spark, wide_csv_day, monkeypatch):
+    """The Arrow-native fast parse, on the driver and in executor tasks,
+    and the declarative unpivot produce the same rows/schema on the
+    fixture (incl. its short and empty rows)."""
     spec = make_spec()
-    a, _ = wide_csv.ingest_wide_csv(spark, wide_csv_day, spec, fast=True)
     b, _ = wide_csv.ingest_wide_csv(spark, wide_csv_day, spec, fast=False)
-    # nullability flags may differ between the two plans; names/types must not
-    assert [(f.name, f.dataType) for f in a.schema] == [
-        (f.name, f.dataType) for f in b.schema
-    ]
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    for name, fast in parse_paths(monkeypatch):
+        if not fast:
+            continue
+        a, _ = wide_csv.ingest_wide_csv(spark, wide_csv_day, spec, fast=True)
+        assert python_stage(a) == (name == "executor")
+        # nullability flags may differ between the two plans; names/types must not
+        assert [(f.name, f.dataType) for f in a.schema] == [
+            (f.name, f.dataType) for f in b.schema
+        ], name
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, name
 
 
-def test_fast_path_used_for_local_file(spark, wide_csv_day):
+def test_fast_path_used_for_local_file(spark, tmp_path, monkeypatch):
+    """A local file takes the unit reader: parsed on the driver up to
+    _DRIVER_PARSE_CELLS estimated cells (data lines x in-range dates), in
+    executor tasks (MapInPandas) above it, with the same rows."""
+    spec = make_spec(start_date="2022-01-01", end_date="2022-12-31")
+    dates = [f"X2022.{m:02d}.{d:02d}" for m in range(1, 5) for d in range(1, 26)]
+    assert len(dates) == 100
+    p = tmp_path / "bound.csv"
+    rows = [f"s{i:03d}," + ",".join(f"{i}.{j % 10}" for j in range(100)) for i in range(101)]
+    p.write_text("SKN," + ",".join(dates) + "\n" + "\n".join(rows[:100]) + "\n")
+    units, layouts = wide_csv.plan_wide_units(spark, [str(p)], spec)
+    at_bound = wide_csv.read_wide_units(spark, units, layouts, spec)  # 10,000 cells
+    assert not python_stage(at_bound)
+    default, _ = wide_csv.ingest_wide_csv(spark, str(p), spec)
+    assert not python_stage(default)
+    with open(p, "a") as f:
+        f.write(rows[100] + "\n")
+    units, layouts = wide_csv.plan_wide_units(spark, [str(p)], spec)
+    above = wide_csv.read_wide_units(spark, units, layouts, spec)  # 10,100 cells
+    assert python_stage(above)
+    monkeypatch.setattr(wide_csv, "_DRIVER_PARSE_CELLS", 20_000)
+    local = wide_csv.read_wide_units(spark, units, layouts, spec)
+    assert not python_stage(local)
+    assert above.count() == 10_100
+    assert above.exceptAll(local).count() == 0 and local.exceptAll(above).count() == 0
+
+
+def test_cron_sized_group_runs_no_python_stage(spark, tmp_path):
+    """A cron day's group (50 stations x 4 in-range days) is parsed on the
+    driver: the executed plan of its observations has no Python stage and
+    no Exchange, and its rows are the declarative ingest's."""
     spec = make_spec()
-    units, layouts = wide_csv.plan_wide_units(spark, [wide_csv_day], spec)
-    obs = wide_csv.read_wide_units(spark, units, layouts, spec)
-    assert obs is not None
-    assert "MapInPandas" in obs._jdf.queryExecution().executedPlan().toString()
-    default, _ = wide_csv.ingest_wide_csv(spark, wide_csv_day, spec)
-    assert "MapInPandas" in default._jdf.queryExecution().executedPlan().toString()
+    p = tmp_path / "cron.csv"
+    header = "SKN,Station.Name," + ",".join(f"X2022.03.{d:02d}" for d in range(1, 8))
+    rows = [f"{i:04d},St{i}," + ",".join(f"{i + d}.5" for d in range(1, 8)) for i in range(50)]
+    p.write_text(header + "\n" + "\n".join(rows) + "\n")
+    obs, _ = wide_csv.ingest_wide_csv(spark, str(p), spec)
+    ref, _ = wide_csv.ingest_wide_csv(spark, str(p), spec, fast=False)
+    assert sorted(obs.collect()) == sorted(ref.collect())
+    plan = obs._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInPandas", "Python", "Exchange"):
+        assert node not in plan, plan
 
 
 def test_positional_id_col_when_skn_absent(spark, tmp_path):
@@ -158,7 +219,7 @@ def test_batch_multi_file_ingest_matches_per_file(spark, tmp_path):
     assert batch.count() == 4  # jan: 3 non-NA cells, feb: 1, old: 0
 
 
-def test_truncated_row_keeps_present_cells_both_paths(spark, tmp_path):
+def test_truncated_row_keeps_present_cells_both_paths(spark, tmp_path, monkeypatch):
     """A truncated tail line (interrupted download) must contribute its
     present in-range cells on BOTH parse paths (PERMISSIVE parity), and
     an over-wide row is truncated to the header width."""
@@ -170,27 +231,24 @@ def test_truncated_row_keeps_present_cells_both_paths(spark, tmp_path):
         "3,13.0,14.0,99.0\n"   # over-wide: extra field dropped
     )
     spec = make_spec()
-    fast, _ = wide_csv.ingest_wide_csv(spark, str(p), spec, fast=True)
-    slow, _ = wide_csv.ingest_wide_csv(spark, str(p), spec, fast=False)
     expect = {
         ("1", "2022-03-02", 10.0), ("1", "2022-03-03", 11.0),
         ("2", "2022-03-02", 12.0),
         ("3", "2022-03-02", 13.0), ("3", "2022-03-03", 14.0),
     }
-    got_fast = {(r.station_id, r.date, r.value) for r in fast.collect()}
-    got_slow = {(r.station_id, r.date, r.value) for r in slow.collect()}
-    assert got_fast == expect
-    assert got_slow == expect
+    for name, fast in parse_paths(monkeypatch):
+        obs, _ = wide_csv.ingest_wide_csv(spark, str(p), spec, fast=fast)
+        assert {(r.station_id, r.date, r.value) for r in obs.collect()} == expect, name
 
 
-def test_blank_station_id_dropped_both_paths(spark, tmp_path):
+def test_blank_station_id_dropped_both_paths(spark, tmp_path, monkeypatch):
     p = tmp_path / "blank_skn.csv"
     p.write_text("SKN,X2022.03.02\n,5.5\n1,6.0\n")
     spec = make_spec()
-    for fast in (True, False):
+    for name, fast in parse_paths(monkeypatch):
         obs, _ = wide_csv.ingest_wide_csv(spark, str(p), spec, fast=fast)
         rows = {(r.station_id, r.value) for r in obs.collect()}
-        assert rows == {("1", 6.0)}, (fast, rows)
+        assert rows == {("1", 6.0)}, (name, rows)
 
 
 def test_batch_ingest_raises_on_unusable_file(spark, tmp_path):
@@ -205,38 +263,51 @@ def test_batch_ingest_raises_on_unusable_file(spark, tmp_path):
         wide_csv.plan_wide_units(spark, [str(good), str(bad)], spec)
 
 
-def test_whitespace_padded_numeric_both_paths(spark, tmp_path):
+def test_whitespace_padded_numeric_both_paths(spark, tmp_path, monkeypatch):
     """' 1.5' must parse on BOTH paths (reference float() trims); a
     whitespace-only cell must RAISE on both (survives the '' filter,
     fails the cast)."""
     p = tmp_path / "pad.csv"
     p.write_text("SKN,X2022.03.02,X2022.03.03\n1, 1.5 ,2.0\n")
     spec = make_spec()
-    for fast in (True, False):
-        obs, _ = wide_csv.ingest_wide_csv(spark, str(p), spec, fast=fast)
-        rows = {(r.date, r.value) for r in obs.collect()}
-        assert rows == {("2022-03-02", 1.5), ("2022-03-03", 2.0)}, (fast, rows)
-
     bad = tmp_path / "ws.csv"
     bad.write_text("SKN,X2022.03.02\n1,  \n")
-    for fast in (True, False):
+    for name, fast in parse_paths(monkeypatch):
+        obs, _ = wide_csv.ingest_wide_csv(spark, str(p), spec, fast=fast)
+        rows = {(r.date, r.value) for r in obs.collect()}
+        assert rows == {("2022-03-02", 1.5), ("2022-03-03", 2.0)}, (name, rows)
         obs, _ = wide_csv.ingest_wide_csv(spark, str(bad), spec, fast=fast)
-        import pytest
-
         with pytest.raises(Exception, match="non-numeric observation value"):
             obs.collect()
 
 
-def test_empty_cell_dropped_both_paths_documented_divergence(spark, tmp_path):
+def test_repeated_header_line_dropped(spark, tmp_path, monkeypatch):
+    """A mid-file line identical to the header (concatenated files) is
+    dropped by the unit reader, on the driver and in executor tasks, not
+    a strict-cast error."""
+    header = "SKN,Station.Name,X2022.03.02,X2022.03.03"
+    p = tmp_path / "concat.csv"
+    p.write_text(f"{header}\n1,Kula,1.0,2.0\n{header}\n2,Hilo,3.0,NA\n")
+    for name, fast in parse_paths(monkeypatch):
+        if not fast:  # the declarative unpivot reads it as a garbage row
+            continue
+        obs, _ = wide_csv.ingest_wide_csv(spark, str(p), make_spec())
+        assert python_stage(obs) == (name == "executor")
+        assert sorted((r.station_id, r.date, r.value) for r in obs.collect()) == [
+            ("1", "2022-03-02", 1.0), ("1", "2022-03-03", 2.0), ("2", "2022-03-02", 3.0)
+        ], name
+
+
+def test_empty_cell_dropped_both_paths_documented_divergence(spark, tmp_path, monkeypatch):
     """Genuinely empty in-range cells drop as missing on both paths (the
     documented divergence from the reference's float('') ValueError)."""
     p = tmp_path / "empty_cell.csv"
     p.write_text("SKN,X2022.03.02,X2022.03.03\n1,,7.0\n")
     spec = make_spec()
-    for fast in (True, False):
+    for name, fast in parse_paths(monkeypatch):
         obs, _ = wide_csv.ingest_wide_csv(spark, str(p), spec, fast=fast)
         rows = {(r.date, r.value) for r in obs.collect()}
-        assert rows == {("2022-03-03", 7.0)}, (fast, rows)
+        assert rows == {("2022-03-03", 7.0)}, (name, rows)
 
 
 def test_data_col_start_positional_contract(spark):
@@ -269,6 +340,7 @@ def test_units_capped_by_max_partition_bytes(spark, tmp_path, monkeypatch):
         obs = wide_csv.read_wide_units(spark, units, layouts, spec)
         ref, _ = wide_csv.ingest_wide_csv(spark, str(p), spec, fast=False)
         assert len(units) > 1
+        assert python_stage(obs)  # group bytes over one chunk read
         assert all(e - s <= 1024 + max(map(len, rows)) for _p, s, e in units)
         assert obs.count() == 300
         assert obs.exceptAll(ref).count() == 0 and ref.exceptAll(obs).count() == 0

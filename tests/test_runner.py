@@ -544,9 +544,13 @@ def _seeded_cron(spark, tmp_path, table):
 def test_cron_run_job_jobs_are_attributed_and_pinned(spark, tmp_path):
     """A cron-shaped run_job (2-day window over a one-file 50-station table,
     some values revised, station metadata on) runs every Spark job in the
-    caller's job group, the metadata write included, and runs 5 of them:
-    1 docs job + 4 merge jobs. In a cold JVM each extra serial query costs
-    seconds, so a new job here must be a deliberate change."""
+    caller's job group, the metadata write included, and runs exactly 4:
+    1 docs job beside 3 merge jobs (target shuffle, observation shuffle,
+    write). The group is parsed on the driver into a local relation, so
+    no job starts a Python worker -- that start, not the job count, was
+    the cold cron's critical path -- and its literal key columns stay
+    join keys, so the target is shuffled once. A new job here must be a
+    deliberate change."""
     from station_data_ingestion_spark.operators.sinks import jsonl_dir_transport
 
     table = str(tmp_path / "obs")
@@ -568,7 +572,35 @@ def test_cron_run_job_jobs_are_attributed_and_pinned(spark, tmp_path):
     bus.waitUntilEmpty()
     assert (stats[cron.data[0].files[0]].created, stats[cron.data[0].files[0]].replaced) == (50, 5)
     assert set(sc.statusTracker().getJobIdsForGroup(None)) - before == set()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+
+
+def test_metadata_is_planned_on_the_docs_thread(spark, tmp_path, monkeypatch):
+    """run_job plans the station metadata (the metadata CSV scan and its
+    projection) on the station-docs thread, not the caller's, so its cold
+    planning runs beside the parse and merge."""
+    import threading
+
+    import station_data_ingestion_spark.plans.runner as runner_mod
+    from station_data_ingestion_spark.operators.sinks import jsonl_dir_transport
+
+    table = str(tmp_path / "obs")
+    cron = _seeded_cron(spark, tmp_path, table)
+    threads = []
+    for name in ("scan_wide_csv", "metadata_from_wide"):
+        real = getattr(runner_mod, name)
+
+        def spy(*a, real=real, name=name, **kw):
+            threads.append((name, threading.current_thread().name))
+            return real(*a, **kw)
+
+        monkeypatch.setattr(runner_mod, name, spy)
+    run_job(
+        spark, cron, table, str(tmp_path / "m.json"),
+        metadata_transport=lambda: jsonl_dir_transport(str(tmp_path / "docs")),
+    )
+    assert sorted(n for n, _t in threads) == ["metadata_from_wide", "scan_wide_csv"]
+    assert all(t.startswith("station-docs") for _n, t in threads), threads
 
 
 def test_batch_writes_one_metadata_docs_job(spark, tmp_path, monkeypatch):

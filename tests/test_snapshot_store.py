@@ -125,6 +125,39 @@ def test_vacuum_keeps_latest_version_files(spark, tmp_path):
     assert [r.value for r in read_table(spark, str(tmp_path / "tbl")).collect()] == [2.0]
 
 
+def test_read_table_lists_snapshots_once(spark, tmp_path, monkeypatch):
+    """read_table resolves its version with one listing of _snapshots/ and
+    reads that manifest once, also when the pruned read is empty and it
+    falls back to the table's (empty) schema."""
+    path = str(tmp_path / "tbl")
+    t = SnapshotTable(spark, path)
+    t.commit_overwrite_partitions(_df(spark, [("1", "2022-03-01", 1.0, "temperature", "day")]))
+    t.commit_overwrite_partitions(_df(spark, [("1", "2022-03-01", 2.0, "temperature", "day")]))
+    calls = []
+    for name in ("latest_version", "_read_manifest"):
+        real = getattr(SnapshotTable, name)
+
+        def spy(self, *a, real=real, name=name):
+            calls.append(name)
+            return real(self, *a)
+
+        monkeypatch.setattr(SnapshotTable, name, spy)
+    for kw, rows in (
+        ({}, 1),
+        ({"partition": {"datatype": "temperature"}}, 1),
+        ({"partition": {"datatype": "rain"}}, 0),
+        ({"ranges": {"date": ("2023-01-01", "2023-12-31")}}, 0),
+        ({"version": 1}, 1),
+    ):
+        calls.clear()
+        df = read_table(spark, path, **kw)
+        assert sorted(calls) == ["_read_manifest", "latest_version"], (kw, calls)
+        assert df.count() == rows, kw
+    assert [r.value for r in read_table(spark, path, version=1).collect()] == [1.0]
+    with pytest.raises(FileNotFoundError, match="version 7"):
+        read_table(spark, path, version=7)
+
+
 @pytest.mark.ingest
 def test_plain_table_is_refused_untouched(spark, tmp_path):
     """A plain hive-partitioned parquet table (no snapshot manifest) is

@@ -20,3 +20,12 @@ def test_tools_import_their_own_checkout():
                 entry = ast.unparse(node.args[-1])
                 assert "__file__" in entry, (name, ast.unparse(node))
     assert calls >= 6
+
+
+def test_time_queries_counts_jobs_through_public_apis():
+    """time_queries.py counts a query's jobs by its job group through the
+    status tracker, not the scheduler's private job counter."""
+    with open(os.path.join(TOOLS, "time_queries.py"), encoding="utf-8") as f:
+        src = f.read()
+    assert "nextJobId" not in src and "dagScheduler" not in src
+    assert "statusTracker().getJobIdsForGroup(" in src

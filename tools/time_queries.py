@@ -1,13 +1,14 @@
 #!/usr/bin/env python
 """Isolated per-query timing with the bench's exact methodology (noop
-sink materialization, guide §1.4) plus Spark job-count deltas.
+sink materialization, guide §1.4) plus Spark job counts.
 
 Usage: python tools/time_queries.py [--sf DIR] [--reps N] q1 q2 ...
 
 One SparkSession for the whole run (like bench.py); each query is timed
 end-to-end from a cold DataFrame build to noop materialization. Use on
 an IDLE box for before/after comparisons of single optimizations —
-bench.py stays the artifact of record.
+bench.py stays the artifact of record. Each run of a query has its own
+job group, and its jobs are counted with the public status tracker.
 """
 
 from __future__ import annotations
@@ -24,10 +25,6 @@ from station_data_ingestion_spark.queries import QUERIES  # noqa: E402
 from station_data_ingestion_spark.session import get_spark  # noqa: E402
 
 
-def next_job_id(spark) -> int:
-    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
-
-
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
@@ -38,18 +35,19 @@ def main():
     # one throwaway action to absorb session/codegen warmup
     spark.range(1000).count()
     out = {}
+    sc = spark.sparkContext
     for q in args.queries:
         best, jobs = None, None
-        for _ in range(args.reps):
-            j0 = next_job_id(spark)
-            spark.sparkContext.setJobDescription(f"time:{q}")
+        for rep in range(args.reps):
+            group = f"time:{q}:{rep}"
+            sc.setJobGroup(group, f"time:{q}")
             t0 = time.perf_counter()
             df = QUERIES[q].fn(spark, args.sf)
             df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
-            j1 = next_job_id(spark)
+            n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
             if best is None or dt < best:
-                best, jobs = dt, j1 - j0
+                best, jobs = dt, n_jobs
         out[q] = {"sec": round(best, 3), "jobs": jobs}
         print(f"{best:8.3f}s  jobs={jobs:>3}  {q}", flush=True)
     print(json.dumps(out))
